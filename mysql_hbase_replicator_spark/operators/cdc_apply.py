@@ -29,11 +29,14 @@ evident intent: always delete the before-key, upsert the after-image.
 upsert of the after-image at its own key; full-row replace already clears
 stale columns in a columnar store).
 
-K6: dead-lettered events are queued in a ``_dead_letter`` table — one
-``batch=<token>`` subdirectory per write, overwritten on micro-batch replay
-so the queue stays exactly-once under at-least-once delivery; exceeding
-``max_dead_letter`` raises, the analog of the failed-event-queue overflow
-exit (Rep.scala:86-92).
+K6: dead-lettered events are queued in a ``_dead_letter`` table. One kernel
+call writes all of its tables' dead letters in ONE write, to a
+``batch=<token>`` subdirectory keyed on the batch token plus the call's
+sorted mapped-table set, overwritten on micro-batch replay so the queue
+stays exactly-once under at-least-once delivery (the per-table calls of
+multi-table snapshot_diff share a token but not a table set, so they never
+overwrite each other); exceeding ``max_dead_letter`` raises, the analog of
+the failed-event-queue overflow exit (Rep.scala:86-92).
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import threading
 import uuid
 from dataclasses import dataclass, field
 
@@ -84,46 +86,36 @@ def dead_letter_batch_path(store: ParquetKeyedStore, token: str) -> str:
     non-alnum character) must never share a directory — with
     mode=overwrite a collision would silently delete the other writer's
     queue, not merely co-mingle rows as append did. Same raw token →
-    same path, so replay idempotence is unaffected."""
-    safe = "".join(ch if (ch.isalnum() or ch in "._-") else "_" for ch in token)
+    same path, so replay idempotence is unaffected. The readable part is
+    cut to 100 characters (a token naming many mapped tables would pass the
+    filesystem's 255-byte name limit); the digest still tells tokens
+    apart."""
+    safe = "".join(ch if (ch.isalnum() or ch in "._-") else "_" for ch in token)[:100]
     digest = hashlib.md5(token.encode("utf-8")).hexdigest()[:8]
     return os.path.join(store.base_dir, DEAD_LETTER_TABLE, f"batch={safe}.{digest}")
 
-# Micro-batch regime switch (r6 verdict #2 — streaming fixed cost): below
-# this many row events the batch's plans are TINY (a few thousand rows per
-# shuffle), and the per-action fixed costs — AQE's per-stage re-optimization
-# rounds, 32-partition shuffles, the collapse-cache materialization — cost
-# more wall-clock than they save. The switch SETS SESSION CONF for the
-# duration of the per-table applies (restored in a finally): callers running
-# UNRELATED queries concurrently on the same SparkSession may plan under the
-# small-batch conf — harmless for correctness, suboptimal for a large
-# concurrent query. A pipeline owns its session in every supported
-# deployment shape; give concurrent heterogeneous workloads their own
-# session (getOrCreate().newSession()) if that ever changes. Small batches therefore run with AQE off,
-# a handful of shuffle partitions, and no collapse persist (recomputing a
-# 5k-row window inside the merge's two actions is cheaper than a dedicated
-# materialization action). Large batches (backfills, the 200k-event kernel
-# bench) keep the session's AQE settings and the collapse cache — the 100 TB
-# configuration. Measured at 5k-event batches: 3.4 s → 2.3 s from the conf
-# switch alone (scripts/profile_stream.py), before the action-count cuts.
-SMALL_BATCH_ROWS = 50_000
-SMALL_BATCH_CONF = {
-    "spark.sql.adaptive.enabled": "false",
-    "spark.sql.shuffle.partitions": "4",
-}
-# The small-batch conf switch mutates SESSION-wide settings around the apply
-# loop. Concurrent kernel applies (the multi-table snapshot pipeline's
-# parallel per-table applies, r14) must not interleave those set/restore
-# windows: thread B snapshotting prev_conf while thread A's temporary values
-# are live would "restore" shuffle.partitions=4 / AQE=off as if user-set,
-# pinning them for the rest of the session (r14 review). Small-batch windows
-# therefore serialize on this lock — cheap by definition (small = fast) —
-# while large batches mutate nothing and stay fully concurrent. A large
-# batch planned while a sibling's small window is open can transiently see
-# the small conf (a bounded perf wobble, never a correctness issue); mixed
-# fleets that care should give heterogeneous workloads their own session
-# (newSession()), per the note above.
-_SMALL_CONF_LOCK = threading.Lock()
+
+# Micro-batch regime. A batch whose optimized plan Spark estimates at or
+# below SMALL_BATCH_BYTES runs as ONE partition: the cached events and the
+# K5 action union are coalesced to a single partition, which already
+# satisfies the stats aggregate's and the collapse window's clustering
+# requirement, so neither plans an Exchange and every kernel action is one
+# single-stage job (with AQE on, a shuffle costs two jobs: the map stage and
+# the re-optimized result stage). The regime is a property of the plan, so
+# it holds in whichever session owns the frame; a session conf could not do
+# this, because foreachBatch hands the kernel frames of the stream's cloned
+# session, which never sees conf set on the caller's. The decision reads
+# the optimized plan's sizeInBytes before the first action, which runs no
+# job; a plan Spark cannot size reports spark.sql.defaultSizeInBytes
+# (Long.MaxValue unless configured) and runs large. Large batches
+# (backfills, the 200k-event kernel bench) keep the session's AQE shuffles
+# and the collapse cache. Measured through the batch API on local[4] with
+# the benchmark's generic log (~174 B per event): at 20k events (3.5 MB) the
+# two plans are within 12% in wall and 6% in CPU; at 50k events one
+# partition takes 4.9 s against 3.2 s, at 200k 17.6 s against 6.6 s. In a
+# stream, a 300-event trigger over 3 tables went from 12 jobs to 6, none
+# of them shuffling (perfbench trickle, --trace 1).
+SMALL_BATCH_BYTES = 4 << 20
 
 
 @dataclass
@@ -199,11 +191,6 @@ def _sink_projection(info: HbaseTableInfo, side: str) -> list[Column]:
     ]
 
 
-def _pks_valid(info: HbaseTableInfo, side: str) -> Column:
-    """K1 precondition: (pk & included) == pk and all PK values non-null."""
-    return _pks_valid_on(info, F.col(side), F.col(f"included_{side}"))
-
-
 def read_checkpoint_state(store: ParquetKeyedStore) -> dict | None:
     """S2 resume: last committed (filename, position) pair — the BinlogTable
     row analog (HbaseApplier.scala:138-153). The reference persists BOTH the
@@ -262,6 +249,9 @@ def apply_cdc_batch(
     result = CdcBatchResult()
     if "filename" not in events.columns:  # pre-rotate fixtures / legacy logs
         events = events.withColumn("filename", F.lit(None).cast("string"))
+    small = _plan_bytes(events) <= SMALL_BATCH_BYTES
+    if small:
+        events = events.coalesce(1)
     events = events.persist()
     try:
         # --- checkpoint + counters + table discovery in ONE driver action ---
@@ -282,11 +272,12 @@ def apply_cdc_batch(
         ord_col = F.col("seq") if "seq" in events.columns else F.col("position")
         # K1 validity is folded into this same pass (one CASE branch per
         # mapped table) so the kernel never pays a dedicated dead-letter
-        # count action: the dead-letter WRITE happens only for tables whose
-        # n_dead here is non-zero (the rare path). Generic multi-table mode
-        # parses the JSON images inline with each table's declared schema —
-        # the identical expressions _apply_table uses, so the counts and the
-        # written rows can't diverge.
+        # count action: the single dead-letter WRITE below happens only
+        # when some table's n_dead here is non-zero (the rare path), and it
+        # selects its rows with this same CASE, so the counts and the
+        # written rows can't diverge. Generic multi-table mode parses the
+        # JSON images inline with each table's declared schema — the
+        # expressions _apply_table's validity filter uses.
         generic_images = dict(events.dtypes).get("before") == "string"
         invalid_case = F.lit(False)
         for fn, info in mappings.items():
@@ -299,9 +290,9 @@ def apply_cdc_batch(
             invalid_case = F.when(
                 F.col("_full_name") == fn, ~_valid_expr(info, b, a)
             ).otherwise(invalid_case)
+        named = events.withColumn("_full_name", _full_name())
         stats = (
-            events.withColumn("_full_name", _full_name())
-            .groupBy("_full_name", "op")
+            named.groupBy("_full_name", "op")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
@@ -382,11 +373,9 @@ def apply_cdc_batch(
         tables_in_batch = set()
         dead_counts: dict[str, int] = {}
         row_counts: dict[str, int] = {}
-        n_row_events = 0
         for r in stats:
             if r["op"] not in ROW_OPS:
                 continue
-            n_row_events += r["n"]
             if r["_full_name"] in mapped:
                 # the JMX-analog counter reports events APPLIED: the group's
                 # dead-lettered rows were diverted, never merged — counting
@@ -405,65 +394,34 @@ def apply_cdc_batch(
             else:
                 result.skipped_unmapped += r["n"]
 
-        row_events = events.filter(F.col("op").isin(*ROW_OPS)).withColumn(
-            "_full_name", _full_name()
-        )
+        result.dead_letter_count = sum(dead_counts.values())
+        if result.dead_letter_count:
+            _write_dead_letters(
+                store,
+                named.filter(F.col("op").isin(*ROW_OPS) & invalid_case),
+                generic_images,
+                # one directory per (batch, mapped-table set): a replayed
+                # call overwrites its own write, while the per-table calls
+                # of multi-table snapshot_diff, which share a batch token,
+                # land in disjoint directories. Without a token the write
+                # gets a unique directory — append semantics.
+                f"{batch_token or 'adhoc-' + uuid.uuid4().hex[:12]}"
+                f"-{','.join(sorted(mappings))}",
+            )
 
-        small = n_row_events < SMALL_BATCH_ROWS
-        # snapshot only EXPLICITLY-set conf values: spark.conf.get(k, None)
-        # returns the effective value (Spark's own default when unset), so
-        # restoring from it would pin defaults as explicit session confs
-        # after the first small batch and mask later spark-defaults changes
-        # (ADVICE r7). SQLConf.contains distinguishes set-vs-default; if the
-        # private accessor ever disappears, fall back to the old
-        # pin-the-default behavior (harmless, just sticky).
-        def _explicit(k: str):
-            try:
-                if spark._jsparkSession.sessionState().conf().contains(k):
-                    return spark.conf.get(k)
-                return None
-            except Exception:
-                return spark.conf.get(k, None)
-
-        prev_conf: dict[str, str | None] = {}
-        if small:
-            # serialize concurrent small-batch conf windows (r14 review —
-            # see _SMALL_CONF_LOCK): prev_conf must be snapshotted INSIDE
-            # the lock or it can capture a sibling's temporary values
-            _SMALL_CONF_LOCK.acquire()
-        try:
-            prev_conf = {k: _explicit(k) for k in SMALL_BATCH_CONF}
-            if small:
-                for k, v in SMALL_BATCH_CONF.items():
-                    spark.conf.set(k, v)
-            for full_name in sorted(tables_in_batch):
-                info = mappings[full_name]
-                ev = row_events.filter(F.col("_full_name") == full_name)
-                t0 = _time.perf_counter()
-                _apply_table(
-                    spark,
-                    ev,
-                    store,
-                    info,
-                    k3_mode,
-                    result,
-                    n_dead=dead_counts.get(full_name, 0),
-                    small=small,
-                    n_valid=row_counts.get(full_name, 0)
-                    - dead_counts.get(full_name, 0),
-                    batch_token=batch_token,
-                )
-                result.apply_latency_s[f"apply:{full_name}"] = _time.perf_counter() - t0
-        finally:
-            if small:
-                try:
-                    for k, v in prev_conf.items():
-                        if v is None:
-                            spark.conf.unset(k)
-                        else:
-                            spark.conf.set(k, v)
-                finally:
-                    _SMALL_CONF_LOCK.release()
+        row_events = named.filter(F.col("op").isin(*ROW_OPS))
+        for full_name in sorted(tables_in_batch):
+            t0 = _time.perf_counter()
+            _apply_table(
+                spark,
+                row_events.filter(F.col("_full_name") == full_name),
+                store,
+                mappings[full_name],
+                k3_mode,
+                small=small,
+                n_valid=row_counts[full_name] - dead_counts[full_name],
+            )
+            result.apply_latency_s[f"apply:{full_name}"] = _time.perf_counter() - t0
 
         if max_dead_letter is not None and result.dead_letter_count > max_dead_letter:
             raise DeadLetterOverflowError(
@@ -498,38 +456,70 @@ def source_struct(info: HbaseTableInfo) -> "T.StructType":
     )
 
 
+def _plan_bytes(df: DataFrame) -> int:
+    """Spark's size estimate for ``df``'s optimized plan: statistics only,
+    no job. A plan Spark cannot size reports spark.sql.defaultSizeInBytes."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _write_dead_letters(
+    store: ParquetKeyedStore, dead: DataFrame, generic_images: bool, token: str
+) -> None:
+    """K6: queue one kernel call's dead letters, every mapped table's, in
+    ONE overwrite of ``token``'s ``batch=`` directory."""
+    # payload: the delivery verbatim. Generic mode embeds the RAW image
+    # strings (pre-parse): serializing parsed structs instead would destroy
+    # any source value the current (possibly wrong) mapping mistyped or
+    # didn't declare, which is exactly the data a replay-after-mapping-fix
+    # needs back (r13 review). Typed mode serializes the typed structs,
+    # which ARE the delivery there.
+    payload = (
+        F.concat(
+            F.lit('{"before":'),
+            F.coalesce(F.col("before"), F.lit("null")),
+            F.lit(',"after":'),
+            F.coalesce(F.col("after"), F.lit("null")),
+            F.lit("}"),
+        )
+        if generic_images
+        else F.to_json(F.struct("before", "after"))
+    )
+    dead.select(
+        F.col("position"),
+        # stream order survives the queue: without seq a replay's K5
+        # collapse falls back to position order, which is invalid when
+        # binlog positions reset per file (r13 review)
+        *([F.col("seq")] if "seq" in dead.columns else []),
+        F.col("op"),
+        F.col("_full_name").alias("table_name"),
+        F.lit("sql statement does not contain all primary keys").alias("reason"),
+        payload.alias("payload"),
+        # preserved verbatim so a replay re-applies the event exactly as
+        # received — the included-columns gate and binlog file included
+        F.col("included_before"),
+        F.col("included_after"),
+        F.col("filename"),
+    ).write.mode("overwrite").parquet(dead_letter_batch_path(store, token))
+
+
 def _apply_table(
     spark: SparkSession,
     ev: DataFrame,
     store: ParquetKeyedStore,
     info: HbaseTableInfo,
     k3_mode: str,
-    result: CdcBatchResult,
-    n_dead: int = -1,
-    small: bool = False,
-    n_valid: int = -1,
-    batch_token: str | None = None,
+    small: bool,
+    n_valid: int,
 ) -> None:
-    # Small-batch regime: the action-expansion union below reads this frame
-    # once per branch (3 branches), so a 32-partition micro-batch cache turns
-    # into ~100 near-empty scan tasks per action. Coalesce (narrow — no
-    # shuffle; each task just reads several cached blocks) to keep task
-    # counts proportional to the data.
-    if small:
-        ev = ev.coalesce(4)
+    if n_valid == 0:
+        # every event for this table was dead-lettered: there is nothing to
+        # merge, and the count is already known from the batch-stats pass —
+        # skip the collapse + store write (the LSM store would otherwise
+        # append an empty delta per all-dead batch)
+        return
     # generic multi-table mode: images arrive as JSON strings; parse them
-    # against THIS table's declared source schema before the typed kernel.
-    # The RAW strings are kept aside first: the dead-letter payload must
-    # preserve the delivery verbatim — serializing the post-parse structs
-    # instead destroys any source value the current (possibly wrong)
-    # mapping mistyped or didn't declare, which is exactly the data a
-    # replay-after-mapping-fix needs back (r13 review).
-    dtypes = dict(ev.dtypes)
-    raw_json_images = dtypes.get("before") == "string"
-    if raw_json_images:
-        ev = ev.withColumn("_raw_before", F.col("before")).withColumn(
-            "_raw_after", F.col("after")
-        )
+    # against THIS table's declared source schema before the typed kernel
+    if dict(ev.dtypes).get("before") == "string":
         struct = source_struct(info)
         ev = ev.withColumn("before", F.from_json("before", struct)).withColumn(
             "after", F.from_json("after", struct)
@@ -542,66 +532,8 @@ def _apply_table(
     # (positions reset per binlog file — see apply_cdc_batch), else position
     ev = ev.withColumn("_ord", F.col("seq") if "seq" in ev.columns else F.col("position"))
 
-    # --- K1 validation → dead letter ---------------------------------------
-    valid = (
-        F.when(F.col("op") == OP_INSERT, _pks_valid(info, "after"))
-        .when(F.col("op") == OP_DELETE, _pks_valid(info, "before"))
-        # update computes both rowkeys, like the reference
-        # (HbaseApplier.scala:250-251 calls getRowKeyForSpark on both images)
-        .when(F.col("op") == OP_UPDATE, _pks_valid(info, "after") & _pks_valid(info, "before"))
-        .otherwise(F.lit(False))
-    )
-    ev = ev.withColumn("_valid", valid)
-    if n_dead < 0:  # caller didn't pre-count (direct _apply_table use)
-        n_dead = ev.filter(~F.col("_valid")).count()
-    if n_dead:
-        dead = ev.filter(~F.col("_valid"))
-        result.dead_letter_count += n_dead
-        # payload: the delivery verbatim. Generic mode embeds the RAW image
-        # strings (pre-parse); typed mode serializes the typed structs,
-        # which ARE the delivery there.
-        payload = (
-            F.concat(
-                F.lit('{"before":'),
-                F.coalesce(F.col("_raw_before"), F.lit("null")),
-                F.lit(',"after":'),
-                F.coalesce(F.col("_raw_after"), F.lit("null")),
-                F.lit("}"),
-            )
-            if raw_json_images
-            else F.to_json(F.struct("before", "after"))
-        )
-        dead.select(
-            F.col("position"),
-            # stream order survives the queue: without seq a replay's K5
-            # collapse falls back to position order, which is invalid when
-            # binlog positions reset per file (r13 review)
-            *([F.col("seq")] if "seq" in dead.columns else []),
-            F.col("op"),
-            F.lit(info.full_name).alias("table_name"),
-            F.lit("sql statement does not contain all primary keys").alias("reason"),
-            payload.alias("payload"),
-            # preserved verbatim so a replay re-applies the event exactly as
-            # received — the included-columns gate and binlog file included
-            F.col("included_before"),
-            F.col("included_after"),
-            F.col("filename"),
-        ).write.mode("overwrite").parquet(
-            # per-(batch, table) subdir: a replayed batch overwrites its own
-            # prior write (idempotent); without a token the write gets a
-            # unique subdir — append semantics in the uniform layout
-            dead_letter_batch_path(
-                store,
-                f"{batch_token or 'adhoc-' + uuid.uuid4().hex[:12]}-{info.full_name}",
-            )
-        )
-    ev = ev.filter(F.col("_valid"))
-    if n_valid == 0:
-        # every event for this table was dead-lettered: there is nothing to
-        # merge, and the count is already known from the batch-stats pass —
-        # skip the collapse + store write (the LSM store would otherwise
-        # append an empty delta per all-dead batch)
-        return
+    # --- K1 validation: the dead letters were queued by apply_cdc_batch ----
+    ev = ev.filter(_valid_expr(info, F.col("before"), F.col("after")))
 
     # --- expand events into keyed actions ----------------------------------
     def upsert_from_after(src: DataFrame) -> DataFrame:
@@ -636,6 +568,11 @@ def _apply_table(
         actions = actions.unionByName(delete_from_before(updates))
     actions = actions.unionByName(delete_from_before(ev.filter(F.col("op") == OP_DELETE)))
 
+    if small:
+        # the union's partitioning is unknown to the planner: one partition
+        # lets the window below plan without an Exchange (SMALL_BATCH_BYTES)
+        actions = actions.coalesce(1)
+
     # --- K5: last action per PK by (stream order, seq) ---------------------
     w = Window.partitionBy(*sink_pks).orderBy(F.desc("_ord"), F.desc("_seq"))
     final = actions.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
@@ -644,8 +581,8 @@ def _apply_table(
     # (changed-bucket discovery, then the staged write) — for LARGE batches,
     # cache the collapse so the window shuffle executes once per batch, not
     # once per action. Small micro-batches skip the cache: the dedicated
-    # materialization action costs more than recomputing a few-thousand-row
-    # window inside the merge's actions (SMALL_BATCH_ROWS note above). A
+    # materialization action costs more than recomputing a one-partition
+    # window inside the merge's actions (SMALL_BATCH_BYTES note above). A
     # single-action store (LogStructuredKeyedStore's delta append) never
     # benefits from the cache.
     cache = not small and store.MULTI_ACTION_MERGE

@@ -318,9 +318,12 @@ EAGERLY at DataFrame-BUILD time and close the collected rows over an Arrow
 kernel. That is sanctioned only because the inputs are bounded metadata —
 ≤ K centroid structs / pq_m×pq_k codewords, the same class as the LSM
 stores' changed-bucket collects — and already eagerly checkpointed by every
-caller. The assert makes the bound structural: a future caller passing an
-unbounded (or expensive lazy) frame fails fast instead of silently pulling
-a corpus onto the driver."""
+caller. A ValueError (not an ``assert``, which ``python -O`` strips) makes
+the bound structural: a future caller passing an unbounded (or expensive
+lazy) frame fails instead of silently feeding a corpus to the kernel. The
+check runs after ``first()`` has returned, so the over-bound rows have
+already been pulled onto the driver when it raises: it stops the build,
+it does not keep the driver's memory safe."""
 
 
 def _assign_cells(
@@ -342,7 +345,8 @@ def _assign_cells(
     centroid job executes even if the returned frame is never acted on,
     and the snapshot is frozen now, not at action time. Callers must pass
     a bounded (≤ _BOUNDED_COLLECT_MAX structs), ideally already
-    eagerly-checkpointed one-row frame; the bound is asserted.
+    eagerly-checkpointed one-row frame; over the bound it raises
+    ValueError, after ``first()`` has already pulled the rows.
 
     Vectorized form (r16, guide §4.2): _seq_l2_acc reproduces _l2_sq's
     left-to-right dim-axis float64 fold bit-for-bit, and with the
@@ -370,11 +374,12 @@ def _assign_cells(
         # empty centroid FRAME: the old crossJoin produced zero rows
         return _null_cols(vectors.where(F.lit(False)))
     cents = sorted(((s["cid"], list(s["c"])) for s in row["cents"] or []))
-    assert len(cents) <= _BOUNDED_COLLECT_MAX, (
-        f"_assign_cells collected {len(cents)} centroids — the build-time "
-        f"driver collect is sanctioned for bounded metadata only "
-        f"(<= {_BOUNDED_COLLECT_MAX}); see _BOUNDED_COLLECT_MAX"
-    )
+    if len(cents) > _BOUNDED_COLLECT_MAX:
+        raise ValueError(
+            f"_assign_cells collected {len(cents)} centroids — the build-time "
+            f"driver collect is sanctioned for bounded metadata only "
+            f"(<= {_BOUNDED_COLLECT_MAX}); see _BOUNDED_COLLECT_MAX"
+        )
     if not cents:
         # one row, empty array: array_min over [] was NULL for every row
         return _null_cols(vectors)
@@ -557,16 +562,18 @@ def _collected_codebooks(cbs: DataFrame, pq_m: int, pq_subdim: int):
 
     CONTRACT (r17): ``cbs.first()`` runs HERE, at build time — see
     _BOUNDED_COLLECT_MAX. Callers pass the eagerly-checkpointed one-row
-    codebook frame; the collected word count is asserted bounded."""
+    codebook frame; over the bound it raises ValueError, after
+    ``first()`` has already pulled the rows."""
     import numpy as np
 
     row = cbs.first()["cbs"]
     n_words = sum(len(words) for words in row)
-    assert n_words <= _BOUNDED_COLLECT_MAX, (
-        f"_collected_codebooks collected {n_words} codewords — the "
-        f"build-time driver collect is sanctioned for bounded metadata "
-        f"only (<= {_BOUNDED_COLLECT_MAX}); see _BOUNDED_COLLECT_MAX"
-    )
+    if n_words > _BOUNDED_COLLECT_MAX:
+        raise ValueError(
+            f"_collected_codebooks collected {n_words} codewords — the "
+            f"build-time driver collect is sanctioned for bounded metadata "
+            f"only (<= {_BOUNDED_COLLECT_MAX}); see _BOUNDED_COLLECT_MAX"
+        )
     return [
         np.array([list(w) for w in words], dtype=np.float32).astype(np.float64)
         for words in row

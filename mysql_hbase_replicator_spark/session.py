@@ -147,6 +147,22 @@ def get_spark(
         # --- python/JVM transport ----------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # --- driver-side plan building -------------------------------------
+        # PySpark's DataFrame debugging wraps every Column function to
+        # record its Python call site: ~6 py4j round trips per call plus a
+        # failing `import IPython` each time. The CDC kernel builds a few
+        # thousand Columns per trigger: turning it off cut a warm 3-table
+        # trigger from ~14k py4j calls to ~4.8k. The cost: an analysis
+        # error no longer names the Python line that built the Column.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache. A 3-table CDC stream cycles through more
+        # generated classes than the default 100-entry LRU holds, so each
+        # was evicted before its next use: Janino recompiled ~43 classes
+        # per warm trigger (20 once small batches stopped shuffling). 2000
+        # entries keeps a pipeline's working set (and the registry
+        # queries') compiled, 0 recompiles per warm trigger; an entry is a
+        # few KiB of bytecode.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # --- scan sizing: keep parquet splits ~128MB ----------------------
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # --- file listing: list bounded-fanout stores on the driver -------

@@ -118,8 +118,10 @@ class CdcStreamPipeline:
     # multi-table snapshot_diff only: tables applied CONCURRENTLY within
     # one micro-batch (thread pool over per-table applies — safe because
     # every table owns disjoint state: its landing subdir, its
-    # PrevSnapshotStore, its store table, and a table-suffixed dead-letter
-    # subdir, cdc_apply.py:572; Spark schedules concurrent actions FIFO).
+    # PrevSnapshotStore, its store table, and its own dead-letter subdir:
+    # each per-table kernel call passes a one-table mapping, and the
+    # kernel keys its dead-letter directory on the batch token plus that
+    # mapped-table set; Spark schedules concurrent actions FIFO).
     # Default 1 = serial (deterministic batch traces). Raise toward the
     # table count when pollers land several tables per trigger wave — the
     # per-table fixed cost (~1.2 s of plan/stage/kernel machinery) then

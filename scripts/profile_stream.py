@@ -145,11 +145,7 @@ def phase_b_detail(spark, root):
     ev = ev.withColumn("before", F.from_json("before", struct)).withColumn(
         "after", F.from_json("after", struct))
     t0 = time.perf_counter()
-    valid = (
-        F.when(F.col("op") == "insert", CA._pks_valid(info, "after"))
-        .when(F.col("op") == "delete", CA._pks_valid(info, "before"))
-        .when(F.col("op") == "update", CA._pks_valid(info, "after") & CA._pks_valid(info, "before"))
-        .otherwise(F.lit(False)))
+    valid = CA._valid_expr(info, F.col("before"), F.col("after"))
     ev2 = ev.withColumn("_valid", valid)
     n_dead = ev2.filter(~F.col("_valid")).count()
     t["b2_dead_count"] = time.perf_counter() - t0

@@ -8,6 +8,8 @@ batch-collapsed apply.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -621,6 +623,14 @@ def test_dead_letter_path_distinct_for_sanitize_colliding_tokens(tmp_path):
     b = dead_letter_batch_path(store, "b0-mixfs_student")
     assert a != b
     assert a == dead_letter_batch_path(store, "b0-mixfs:student")
+    # a kernel call's token names every mapped table: the directory name
+    # stays under the filesystem's 255-byte limit, and tokens that share a
+    # long prefix still get disjoint directories
+    tables = ",".join(f"mixfs.table_{i:03d}" for i in range(40))
+    long_a = dead_letter_batch_path(store, f"b0-{tables},mixfs.a")
+    long_b = dead_letter_batch_path(store, f"b0-{tables},mixfs.b")
+    assert long_a != long_b
+    assert max(len(os.path.basename(p)) for p in (long_a, long_b)) < 255
 
 
 def test_dead_letter_drain_migrates_legacy_root_files(
@@ -744,6 +754,56 @@ def test_drain_collapses_cross_token_replay_duplicates(
     res = replay_dead_letters(spark, store, mappings)
     assert res is not None and res.dead_letter_count == 1  # one failure
     assert spark.read.parquet(str(dl_dir)).count() == 1  # re-queued ONCE
+
+
+def test_dead_letters_of_two_tables_share_one_write(spark, tmp_path, student_mapping):
+    """One kernel call queues every mapped table's dead letters in ONE
+    write: a generic batch with a missing-PK row in each of two tables
+    leaves a single ``batch=`` directory (a replay of the call overwrites
+    it), and the drain replays both tables' events from it."""
+    from mysql_hbase_replicator_spark.catalog.meta import HbaseCollInfo, HbaseTableInfo
+    from mysql_hbase_replicator_spark.operators.cdc_apply import replay_dead_letters
+
+    def codes_mapping(pk):
+        return HbaseTableInfo(
+            dbName="mixfs", dbTableName="codes", hbaseTableName="mixfs:codes",
+            hbaseNameSpace="mixfs", sparkTableName="codes", bytesUtils="Binary",
+            cols=[
+                HbaseCollInfo("id", "int(11)", "id", "IntegerType", pk == "id"),
+                HbaseCollInfo("label", "varchar(10)", "label", "StringType", pk == "label"),
+            ],
+        )
+
+    ev_df = spark.createDataFrame(
+        [
+            (1, "insert", "mixfs", "student", None,
+             '{"id": 2, "score": 50, "name": "eve", "rem": "e"}', None, None, None),
+            (2, "insert", "mixfs", "codes", None, '{"label": "y"}', None, None, None),
+        ],
+        "position long, op string, db string, table string, before string, "
+        "after string, included_before array<string>, "
+        "included_after array<string>, filename string",
+    )
+    store = ParquetKeyedStore(str(tmp_path / "store"), n_buckets=4)
+    mappings = {"mixfs.student": student_mapping, "mixfs.codes": codes_mapping("id")}
+    dl_dir = tmp_path / "store" / "_dead_letter"
+    for _delivery in range(2):
+        res = apply_cdc_batch(spark, ev_df, store, mappings, batch_token="b3")
+        assert res.dead_letter_count == 2
+        assert [p.name.startswith("batch=") for p in dl_dir.iterdir()] == [True]
+    queued = spark.read.parquet(str(dl_dir)).collect()
+    assert sorted((r.table_name, r.position) for r in queued) == [
+        ("mixfs.codes", 2), ("mixfs.student", 1),
+    ]
+
+    fixed = {"mixfs.student": _pk_id_only_mapping(), "mixfs.codes": codes_mapping("label")}
+    res = replay_dead_letters(spark, store, fixed)
+    assert res is not None and res.dead_letter_count == 0
+    assert sorted(res.applied_counts) == ["mixfs.codes.insert", "mixfs.student.insert"]
+    assert spark_final_state(spark, store) == [(None, 2, 50, "eve", "e")]
+    codes = store.read(spark, "mixfs:codes").select("id", "label").collect()
+    assert [(r.id, r.label) for r in codes] == [(None, "y")]
+    assert replay_dead_letters(spark, store, fixed) is None
 
 
 # --- r13 review regressions: dead-letter fidelity, ordering, counters ------

@@ -3,6 +3,8 @@ vs exact Jaccard, SimHash properties, LSH-ANN recall vs brute force."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1403,7 +1405,7 @@ def test_build_time_collects_assert_bounded_metadata(spark):
             )
         ).alias("cents")
     )
-    with pytest.raises(AssertionError, match="bounded metadata"):
+    with pytest.raises(ValueError, match="bounded metadata"):
         _assign_cells(vecs, over)
 
     over_cbs = spark.range(_BOUNDED_COLLECT_MAX + 1).agg(
@@ -1411,5 +1413,40 @@ def test_build_time_collects_assert_bounded_metadata(spark):
             F.collect_list(F.array(F.lit(0.0)).cast("array<float>"))
         ).alias("cbs")
     )
-    with pytest.raises(AssertionError, match="bounded metadata"):
+    with pytest.raises(ValueError, match="bounded metadata"):
         _collected_codebooks(over_cbs, 1, 1)
+
+
+def test_build_time_collect_bound_survives_python_O():
+    """The collect bound is a raise, not an ``assert``: ``python -O``
+    strips asserts, and the guard must hold there too. Stub frames stand in
+    for the collected one-row inputs (only ``first()`` and ``schema`` are
+    read before the check), so the child process needs no JVM."""
+    import subprocess
+    import sys
+
+    code = """
+from types import SimpleNamespace
+from pyspark.sql import types as T
+from mysql_hbase_replicator_spark.operators.similarity import (
+    _BOUNDED_COLLECT_MAX, _assign_cells, _collected_codebooks,
+)
+over = _BOUNDED_COLLECT_MAX + 1
+frame = lambda row: SimpleNamespace(first=lambda: row)
+vecs = SimpleNamespace(schema=T.StructType([]))
+cents = {"cents": [{"cid": i, "c": [0.0]} for i in range(over)]}
+for call in (lambda: _assign_cells(vecs, frame(cents)),
+             lambda: _collected_codebooks(frame({"cbs": [[[0.0]] * over]}), 1, 1)):
+    try:
+        call()
+    except ValueError as e:
+        assert "bounded metadata" in str(e)
+        print("raised")
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["raised", "raised"]

@@ -367,6 +367,42 @@ def test_multitable_parallel_applies_converge(
     assert read_checkpoint_state(pipe.store)["position"] == 2
 
 
+def test_multitable_dead_letters_of_one_batch_keep_both_queues(
+    spark, tmp_path, student_struct, student_mapping, teacher_struct,
+    teacher_mapping,
+):
+    """Multi-table snapshot_diff applies each table through its own kernel
+    call, and those calls share one batch token. When both tables
+    dead-letter in the same micro-batch, both queues must survive: the
+    dead-letter directory is keyed on the token AND the call's mapped-table
+    set, so the second table's overwrite cannot land on the first's."""
+    root = str(tmp_path / "landing")
+    write_snapshot(
+        os.path.join(root, "mixfs.student"), "s1.json",
+        [srow(1, 1, 90, "ann", "a"), srow(None, 2, 80, "bob", "b")], ver=1,
+    )
+    write_snapshot(
+        os.path.join(root, "mixfs.teacher"), "t1.json",
+        [trow(1, "math", 100), trow(None, "art", 90)], ver=1,
+    )
+    pipe = make_multi_pipe(
+        spark, tmp_path, root, student_struct, student_mapping,
+        teacher_struct, teacher_mapping,
+    )
+    pipe.max_files_per_trigger = 16  # both tables' landings in one batch
+    q = pipe.start(available_now=True)
+    q.awaitTermination(120)
+    assert sum(r.dead_letter_count for r in pipe.results) == 2
+    dead = spark.read.parquet(str(tmp_path / "mstore" / "_dead_letter"))
+    assert sorted(r.table_name for r in dead.collect()) == [
+        "mixfs.student", "mixfs.teacher",
+    ]
+    assert state(spark, pipe.store, "mixfs:student2", S_COLS) == [
+        (1, 1, 90, "ann", "a"),
+    ]
+    assert state(spark, pipe.store, "mixfs:teacher2", T_COLS) == [(1, "math", 100)]
+
+
 def test_parallel_apply_failure_lets_sibling_finish_then_reraises(
     spark, tmp_path, student_struct, student_mapping, teacher_struct,
     teacher_mapping,
@@ -730,18 +766,20 @@ def test_concurrent_small_batch_applies_preserve_buckets_and_conf(
     ParquetKeyedStore.merge on its own table) inside forced small-batch
     conf windows must (a) never delete an unaffected bucket — the r14
     STATIC-overwrite race deleted every bucket the merge didn't touch when
-    one thread's conf restore interleaved another's write — and (b) restore
-    the session conf to its true prior values, not a sibling window's
-    temporaries. Four rounds widen the interleaving window."""
+    one thread's conf restore interleaved another's write — and (b) leave
+    the session conf exactly as it was: the kernel plans small batches as
+    one partition instead of switching confs, so AQE and the shuffle
+    partition count are neither set, unset nor pinned by an apply. Four
+    rounds widen the interleaving window."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from mysql_hbase_replicator_spark.operators.cdc_apply import SMALL_BATCH_CONF
+    conf_keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
     def explicit(key):
         jconf = spark._jsparkSession.sessionState().conf()
         return spark.conf.get(key) if jconf.contains(key) else None
 
-    prior = {k: explicit(k) for k in SMALL_BATCH_CONF}
+    prior = {k: explicit(k) for k in conf_keys}
 
     store = ParquetKeyedStore(str(tmp_path / "store"), n_buckets=8)
 
@@ -797,9 +835,9 @@ def test_concurrent_small_batch_applies_preserve_buckets_and_conf(
     assert state(spark, store, "mixfs:teacher2", T_COLS) == sorted(
         (tid, "math", (200 + tid) if tid <= 4 else 100) for tid in range(1, 17)
     )
-    # (b) session conf restored to its true priors (set stays set at the
-    # same value; unset stays unset — not a sibling's temporary)
-    assert {k: explicit(k) for k in SMALL_BATCH_CONF} == prior
+    # (b) session conf untouched (set stays set at the same value; unset
+    # stays unset)
+    assert {k: explicit(k) for k in conf_keys} == prior
 
 
 def test_benign_skip_warns_and_never_proves_unhealed_present_file(

@@ -513,3 +513,55 @@ def test_soak_debezium_envelope_source(spark, tmp_path, student_mapping):
         (d, dict(doc_batches[0] + doc_batches[1])[d]) for d in admitted1 + admitted2
     )
     assert docs == expected_docs
+
+
+# --- fixed cost per trigger --------------------------------------------------
+def test_small_trigger_job_count(spark, tmp_path, student_mapping):
+    """A small generic trigger over three mapped tables, each with one dead
+    letter, runs at most 6 Spark jobs: the events cache (AQE materializes
+    it as its own stage), the stats pass, ONE dead-letter write for all
+    tables and one delta append per table. Small batches plan as one
+    partition, so no kernel action shuffles; with a shuffle per action and
+    a dead-letter write per table the same trigger ran 12."""
+    from mysql_hbase_replicator_spark.operators.merge import LogStructuredKeyedStore
+
+    events = []
+    for i in range(1, 31):
+        events += [
+            {"position": 4 * i, "op": "insert", "db": "mixfs", "table": "student",
+             "after": {"sn": i, "id": i % 3, "score": i, "name": f"n{i}", "rem": "r"}},
+            {"position": 4 * i + 1, "op": "insert", "db": "mixfs", "table": "score_log",
+             "after": {"entry_id": i, "points": i / 2}},
+            {"position": 4 * i + 2, "op": "insert", "db": "mixfs", "table": "docs",
+             "after": {"doc_id": i, "text": f"t{i}"}},
+        ]
+    events += [  # one missing-PK event per mapped table
+        {"position": 200, "op": "insert", "db": "mixfs", "table": "student",
+         "after": {"sn": 99, "score": 1}},
+        {"position": 201, "op": "insert", "db": "mixfs", "table": "score_log",
+         "after": {"points": 1.0}},
+        {"position": 202, "op": "insert", "db": "mixfs", "table": "docs",
+         "after": {"text": "orphan"}},
+    ]
+    write_events(str(tmp_path / "events"), "b1", events)
+    store = LogStructuredKeyedStore(str(tmp_path / "store"))
+    pipe = CdcStreamPipeline(
+        spark=spark,
+        events_path=str(tmp_path / "events"),
+        row_struct=None,
+        store=store,
+        mappings={
+            "mixfs.student": student_mapping,
+            "mixfs.score_log": score_log_mapping(),
+            "mixfs.docs": docs_mapping(),
+        },
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    q = pipe.start(available_now=True)
+    q.awaitTermination(120)
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert len(pipe.results) == 1
+    assert pipe.results[0].dead_letter_count == 3
+    assert spark.read.parquet(str(tmp_path / "store" / "_dead_letter")).count() == 3
+    assert len(jobs) <= 6, f"{len(jobs)} jobs for one small trigger"
