@@ -76,9 +76,7 @@ def dead_letter_batch_path(store: ParquetKeyedStore, token: str) -> str:
     keeps working via partition discovery (the token surfaces as a
     ``batch`` string column). Root-level files must never be mixed into
     this layout: Spark refuses a mixed root-file / partition-dir
-    directory, so ALL writers go through this helper (and the drain path
-    migrates pre-upgrade root files into a ``batch=legacy-migrated``
-    subdir before reading).
+    directory, so ALL writers go through this helper.
 
     The directory name carries BOTH the sanitized token (human-readable)
     and an md5 prefix of the RAW token: two distinct raw tokens that
@@ -636,24 +634,6 @@ def replay_dead_letters(
         drain_dirs.append(dst)
     if not drain_dirs:
         return None
-    # Layout shim for pre-upgrade queues: the old writers appended parquet
-    # files at the TABLE ROOT, the current layout is batch=<token> partition
-    # subdirs, and Spark's partition discovery refuses a directory mixing
-    # the two. Move any visible root-level files into their own batch=
-    # subdir before reading (idempotent and crash-safe: the drain dir is
-    # already renamed aside, and a re-run just moves whatever files remain;
-    # underscore/dot files like _SUCCESS are invisible to discovery).
-    for d in drain_dirs:
-        root_files = [
-            f
-            for f in os.listdir(d)
-            if os.path.isfile(os.path.join(d, f)) and not f.startswith(("_", "."))
-        ]
-        if root_files:
-            legacy = os.path.join(d, "batch=legacy-migrated")
-            os.makedirs(legacy, exist_ok=True)
-            for f in root_files:
-                shutil.move(os.path.join(d, f), os.path.join(legacy, f))
     dl = spark.read.option("mergeSchema", "true").parquet(*drain_dirs)
     if "batch" in dl.columns:
         # the per-write subdir token surfaces as a partition column on read;
@@ -675,13 +655,6 @@ def replay_dead_letters(
     # formatting — those duplicates are collapsed by the post-extraction
     # dedupe on ev_df below, after get_json_object has re-minified both.
     dl = dl.dropDuplicates()
-    for c, t in (
-        ("included_before", "array<string>"),  # legacy pre-upgrade queues
-        ("included_after", "array<string>"),
-        ("filename", "string"),
-    ):
-        if c not in dl.columns:
-            dl = dl.withColumn(c, F.lit(None).cast(t))
     # Re-queue (K6: failures never vanish) everything the drain cannot
     # apply, VERBATIM from the queue rows: ingest-level dead letters whose
     # op is not a row op (e.g. corrupt Debezium envelopes queued by

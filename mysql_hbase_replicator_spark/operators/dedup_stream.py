@@ -213,40 +213,6 @@ class _CompactingIndexBase:
             reader = reader.schema(schema)
         return reader.parquet(live_dir).filter(F.col(dir_col).isin(keys))
 
-    def _migrate_flat_layout(
-        self,
-        live_dir: str,
-        dir_col: str,
-        derive,
-        dedupe: bool = False,
-    ) -> None:
-        """Upgrade a store written before its layout gained ``dir_col=``
-        hive partition dirs. Root-level part files are the signature of
-        the old flat layout; mixing new-style subdirs beside them would
-        produce a directory Spark's partition discovery rejects, and the
-        screens' partition filter would raise UNRESOLVED_COLUMN on the
-        old schema — so the store is rewritten ONCE, through the same
-        staged swap compaction uses, before any new-style read or append
-        touches it. ``derive(frame)`` must return the frame with
-        ``dir_col`` present (derive it when the old schema lacks it;
-        no-op when it was already a data column). One-time O(|store|)
-        cost; crash-safe via _recover's staging/retired handling."""
-        if not os.path.isdir(live_dir):
-            return
-        flat = [f for f in os.listdir(live_dir) if f.endswith(".parquet")]
-        if not flat:
-            return
-        frame = derive(self.spark.read.parquet(live_dir))
-        if dedupe:
-            frame = frame.distinct()
-        staging, retired = live_dir + ".compacting", live_dir + ".retired"
-        frame.repartition(self.n_compact_partitions, dir_col).write.mode(
-            "overwrite"
-        ).partitionBy(dir_col).parquet(staging)
-        os.replace(live_dir, retired)
-        os.replace(staging, live_dir)
-        shutil.rmtree(retired)
-
     def _recover(self, live_dir: str) -> None:
         """Reclaim a crashed compaction pass for one directory. If the crash
         hit between retire and promote, the '.retired' copy is the ONLY
@@ -461,18 +427,6 @@ class IncrementalDeduper(_CompactingIndexBase):
         self._recover(self.index_dir)
         if self.rerank_threshold is not None:
             self._recover(self.shingle_dir)
-            # pre-r16 shingle stores are flat part files with no sbucket
-            # column; the screen's partition filter and the hive appends
-            # both require the new layout (r16 review — restart compat)
-            self._migrate_flat_layout(
-                self.shingle_dir,
-                "sbucket",
-                lambda df: df.withColumn(
-                    "sbucket",
-                    F.pmod("doc_id", F.lit(self.SHINGLE_BUCKETS)).cast("int"),
-                ),
-                dedupe=True,
-            )
         # idle polls (empty batches) return immediately — otherwise every
         # empty trigger appends an empty parquet file to the band index
         # (and shingle store), inflating file counts and compaction churn
@@ -895,11 +849,6 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
         from mysql_hbase_replicator_spark.operators.similarity import norm_sq
 
         self._recover(self.index_dir)
-        # pre-r16 indexes stored cell as a plain data column in flat part
-        # files; hive cell= appends beside them would break partition
-        # discovery (r16 review — restart compat). cell already exists in
-        # the old schema, so the derive is the identity.
-        self._migrate_flat_layout(self.index_dir, "cell", lambda df: df)
         prepared = vecs.select(
             "vec_id", "embedding", norm_sq(F.col("embedding")).alias("nsq")
         )

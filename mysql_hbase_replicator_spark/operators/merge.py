@@ -82,9 +82,10 @@ class ParquetKeyedStore:
     # what option("mergeSchema") computes — but mergeSchema derives it by
     # OPENING EVERY FOOTER at plan time, a per-read job whose cost is pure
     # fixed overhead in the streaming micro-batch path (profiled ~0.2 s per
-    # merge at 5k events; see PLANS.md streaming-floor table). Tables written
-    # before this registry existed fall back to mergeSchema once and are
-    # upgraded on their next write.
+    # merge at 5k events; see PLANS.md streaming-floor table). The mergeSchema
+    # fallback remains because a crash can fall between a first write's data
+    # and its registry: the files are there, the registry is not yet, and the
+    # next write records it.
 
     def _schema_path(self, name: str) -> str:
         return os.path.join(self.table_path(name), SCHEMA_FILE)
@@ -95,9 +96,6 @@ class ParquetKeyedStore:
                 doc = json.load(f)
         except (OSError, ValueError):
             return None
-        # legacy format: the bare StructType JSON (no wrapper object)
-        if isinstance(doc, dict) and doc.get("type") == "struct":
-            return {"schema": doc}
         return doc if isinstance(doc, dict) else None
 
     def _read_schema(self, name: str) -> T.StructType | None:
@@ -171,18 +169,14 @@ class ParquetKeyedStore:
         upserts: DataFrame,
         delete_keys: DataFrame,
         pk_cols: list[str],
-        affected: list[int] | None = None,
     ) -> None:
         """MERGE: delete rows matching ``delete_keys`` or ``upserts`` keys,
         then insert ``upserts``. Equivalent to
         ``MERGE INTO t ON pk WHEN MATCHED [AND in deletes] DELETE
         WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``.
 
-        Only affected buckets are read and rewritten. ``affected`` lets a
-        caller supply the changed buckets when it already knows them (they
-        must come from the identical ``_bucket`` hash over the same typed key
-        columns); when None they are discovered here with a distinct-collect
-        action.
+        Only affected buckets are read and rewritten; they are discovered
+        here with a distinct-collect action.
         """
         path = self.table_path(name)
         if not self.exists(name) or not self._has_data_files(name):
@@ -192,11 +186,10 @@ class ParquetKeyedStore:
         changed_keys = (
             upserts.select(*pk_cols).unionByName(delete_keys.select(*pk_cols)).dropDuplicates()
         )
-        if affected is None:
-            affected = [
-                r[0]
-                for r in changed_keys.select(self._bucket(pk_cols).alias("b")).distinct().collect()
-            ]
+        affected = [
+            r[0]
+            for r in changed_keys.select(self._bucket(pk_cols).alias("b")).distinct().collect()
+        ]
         if not affected:
             return
 
@@ -292,7 +285,6 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
 
     MULTI_ACTION_MERGE = False
     SEQ_COL = "_lsm_seq"
-    LEGACY_DELTA_DIR = "_delta"  # pre-r13 layout: deltas inside the table dir
 
     def __init__(
         self,
@@ -315,164 +307,25 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
             raise ValueError(f"keep_versions must be >= 1 (got {keep_versions})")
         self.keep_versions = keep_versions
 
-    # --- legacy-layout upgrade ------------------------------------------------
-    def _legacy_layout_present(self, name: str) -> bool:
-        """True when the table dir holds the PRE-POINTER layout: bucket
-        partition dirs directly under table_path (the rewrite store's
-        layout, also the pre-r13 LSM base) and/or a ``_delta`` dir, with a
-        registry that has never recorded a version pointer."""
-        doc = self._registry(name)
-        if doc is not None and ("base_version" in doc or "delta_version" in doc):
-            return False
-        try:
-            entries = os.listdir(self.table_path(name))
-        except OSError:
-            return False
-        return any(
-            e.startswith(f"{BUCKET_COL}=") or e == self.LEGACY_DELTA_DIR
-            for e in entries
-        )
-
-    def _maybe_migrate_legacy(self, name: str) -> None:
-        """One-time lazy upgrade of a pre-pointer table dir: bucket dirs
-        move (rename, no data rewrite) into ``base_v0``, legacy ``_delta``
-        seq dirs into ``delta_v0``, and the pointer is written. Without
-        this, a store written by the old layout — or by the REWRITE store,
-        whose layout is identical to the legacy base — would silently read
-        as empty under the pointer protocol (r13 review). The same move
-        doubles as the rewrite→LSM conversion path: reopening a
-        ParquetKeyedStore directory as a LogStructuredKeyedStore upgrades
-        it in place. Runs under the writer flock, re-checked after the
-        acquire; callers invoke it BEFORE taking the flock (not
-        re-entrant). A table crashed mid-swap by the OLD release's rename
-        protocol (live dir renamed aside, ``.compacting`` staged) is
-        FINISHED here first — the old ``_recover_locked`` semantics
-        replayed once, so the upgrade never presents a crashed table as
-        empty (r13 review: `_legacy_layout_present` returns False on a
-        missing live dir, and without this step the next batch would write
-        a fresh base_v0 and permanently orphan the crashed data)."""
-        if not (
-            self._legacy_layout_present(name)
-            or os.path.isdir(self.table_path(name) + ".compacting")
-            or os.path.isdir(self.table_path(name) + ".pre-compact")
-            or os.path.exists(self.table_path(name) + ".promoting")
-        ):
-            return
-        with self._table_flock(name):
-            self._recover_legacy_swap_locked(name)
-            if not self._legacy_layout_present(name):
-                return  # another process migrated while we waited
-            tp = self.table_path(name)
-            base_dir = self._ver_path(name, "base", 0)
-            delta_dir = self._ver_path(name, "delta", 0)
-            moved_base = False
-            for e in os.listdir(tp):
-                if e.startswith(f"{BUCKET_COL}="):
-                    os.makedirs(base_dir, exist_ok=True)
-                    os.rename(os.path.join(tp, e), os.path.join(base_dir, e))
-                    moved_base = True
-            legacy_delta = os.path.join(tp, self.LEGACY_DELTA_DIR)
-            if os.path.isdir(legacy_delta):
-                os.makedirs(delta_dir, exist_ok=True)
-                for e in os.listdir(legacy_delta):
-                    os.rename(
-                        os.path.join(legacy_delta, e), os.path.join(delta_dir, e)
-                    )
-                shutil.rmtree(legacy_delta, ignore_errors=True)
-            doc = self._doc(name)  # carries the legacy schema/pk_cols forward
-            fields: dict = {
-                "base_version": 0 if moved_base else None,
-                "delta_version": 0,
-            }
-            if doc.get("schema") is not None:
-                fields["schema"] = doc["schema"]
-            if doc.get("pk_cols") is not None:
-                fields["pk_cols"] = doc["pk_cols"]
-            self._update_registry(name, **fields)
-
-    def _recover_legacy_swap_locked(self, name: str) -> None:
-        """Finish the OLD release's compaction swap (its ``_recover_locked``,
-        replayed once at upgrade; caller holds the table flock). The old
-        rename dance was: write ``<table>.compacting`` (complete iff it has
-        _SUCCESS) → rename live aside to ``<table>.pre-compact`` → rename
-        staging to live → rmtree the old dir. A crash between the renames
-        leaves NO live data; under the pointer protocol that read as an
-        empty fresh table. Resolution order: a completed staging dir is the
-        new truth when the live dir has no data; otherwise a surviving
-        ``.pre-compact`` is restored rather than deleted (defensive
-        tightening of the old protocol — never rmtree the only copy); a
-        table already carrying a version pointer treats both as stale
-        pre-upgrade garbage."""
-        tp = self.table_path(name)
-        staging = tp + ".compacting"
-        old = tp + ".pre-compact"
-        marker = tp + ".promoting"
-        if not (
-            os.path.isdir(staging) or os.path.isdir(old) or os.path.exists(marker)
-        ):
-            return
-        doc = self._registry(name) or {}
-        already_pointered = "base_version" in doc or "delta_version" in doc
-
-        def _promote(src: str) -> None:
-            # live may already exist holding lock/registry files — move the
-            # staged entries in rather than renaming the whole dir. The move
-            # is one rename PER ENTRY, so a crash mid-promote leaves live
-            # holding a partial copy and src the remainder — without a
-            # record of the in-flight promote, the next recovery pass would
-            # see live_has_data=True and rmtree the remainder (silent data
-            # loss, ADVICE r13). The `.promoting` marker names the source
-            # suffix BEFORE the first rename; recovery resumes the move
-            # instead of judging live/src as independent candidates.
-            tmp = marker + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(src[len(tp):])  # ".compacting" | ".pre-compact"
-            os.replace(tmp, marker)
-            os.makedirs(tp, exist_ok=True)
-            for e in os.listdir(src):
-                os.rename(os.path.join(src, e), os.path.join(tp, e))
-            shutil.rmtree(src, ignore_errors=True)
-            os.remove(marker)
-
-        # Resume an interrupted promote FIRST: until the in-flight move
-        # finishes, _dir_has_parquet(tp) reflects a partial copy and must
-        # not drive any delete decision. Each entry moves via a single
-        # atomic rename, so resuming simply moves whatever remains in src
-        # (entries already promoted are no longer listed there).
-        if os.path.exists(marker):
-            try:
-                with open(marker) as f:
-                    suffix = f.read().strip()
-            except OSError:
-                suffix = ""
-            src = tp + suffix if suffix in (".compacting", ".pre-compact") else ""
-            if src and os.path.isdir(src):
-                _promote(src)
-            else:
-                # promote had completed (src swept) or the marker is
-                # unreadable garbage — clear it and fall through
-                try:
-                    os.remove(marker)
-                except OSError:
-                    pass
-        live_has_data = self._dir_has_parquet(tp)
-
-        if os.path.isdir(staging):
-            staged_ok = os.path.exists(os.path.join(staging, "_SUCCESS"))
-            if staged_ok and not live_has_data and not already_pointered:
-                _promote(staging)
-                live_has_data = True
-            else:
-                shutil.rmtree(staging, ignore_errors=True)
-        if os.path.isdir(old):
-            if not live_has_data and not already_pointered and self._dir_has_parquet(old):
-                _promote(old)
-            else:
-                shutil.rmtree(old, ignore_errors=True)
-
     # --- versioned-pointer registry ------------------------------------------
     def _doc(self, name: str) -> dict:
         return self._registry(name) or {}
+
+    def _pointer_doc(self, name: str) -> dict:
+        """The table's pointer doc, ``{}`` for a table not written yet.
+        Every write of this store records ``delta_version``; a non-empty doc
+        without it is the rewrite store's ``_schema.json``, whose bucket
+        dirs sit outside any version dir. Such a table is refused rather
+        than read as empty or overwritten."""
+        doc = self._doc(name)
+        if doc and "delta_version" not in doc:
+            raise ValueError(
+                f"table {name!r} under {self.base_dir} has no version pointer "
+                f"in {SCHEMA_FILE}: it was written by the rewrite store "
+                f"(ParquetKeyedStore) and cannot be opened as a log-structured "
+                f"store"
+            )
+        return doc
 
     def _update_registry(self, name: str, **fields) -> dict:
         doc = self._doc(name)
@@ -580,9 +433,8 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         sibling's posture; the old layout got this implicitly because the
         static overwrite wiped the whole table dir). Files linger one flip
         as the reader-retirement window, then the sweep drops them."""
-        self._maybe_migrate_legacy(name)
         with self._table_flock(name):
-            doc = self._doc(name)
+            doc = self._pointer_doc(name)
             prev_base = doc.get("base_version")
             new_ver = (int(prev_base) if prev_base is not None else -1) + 1
             staged = df.withColumn(BUCKET_COL, self._bucket(pk_cols)).repartition(BUCKET_COL)
@@ -608,7 +460,6 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         pk_cols: list[str],
     ) -> None:
         actions = final.select(*sink_cols, KIND_COL)
-        self._maybe_migrate_legacy(name)
         # The append runs UNDER the per-table flock (same posture the
         # bucketed sibling adopted for ADVICE r11): the delta seq is picked
         # from a directory listing and the registry is read-modify-written —
@@ -618,7 +469,7 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         # not re-entrant, so the compaction trigger is evaluated outside the
         # lock (compact() takes the same flock and re-checks under it).
         with self._table_flock(name):
-            doc = self._doc(name)
+            doc = self._pointer_doc(name)
             seqs = self._delta_seqs(name, doc)
             n = (seqs[-1] + 1) if seqs else 0
             out = os.path.join(self._delta_path(name, doc), f"{self.SEQ_COL}={n}")
@@ -626,28 +477,9 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
             # leaves only an uncommitted _temporary dir (invisible to
             # readers) and the replayed batch lands at the next seq
             actions.write.mode("overwrite").parquet(out)
-            # registry schema = the SINK schema (no _kind: that column
-            # exists only inside delta files; leaking it into the registry
-            # would make base reads surface a phantom null column) UNIONED
-            # with whatever the registry already recorded: if a source stops
-            # sending a column, overwriting with only the current batch's
-            # (narrower) schema would silently null that column on base
-            # reads and the next compact() would drop it permanently — the
-            # rewrite store preserves dropped columns via
-            # unionByName(allowMissingColumns=True), and this is the LSM
-            # analog (ADVICE r7)
-            new_schema = actions.drop(KIND_COL).schema
-            prev = self._read_schema(name)
-            if prev is not None:
-                new_names = set(new_schema.names)
-                merged = list(new_schema.fields) + [
-                    f for f in prev.fields
-                    if f.name not in new_names and f.name not in (BUCKET_COL, KIND_COL)
-                ]
-                new_schema = T.StructType(merged)
             self._update_registry(
                 name,
-                schema=new_schema.jsonValue(),
+                schema=self._widened_schema(actions, doc).jsonValue(),
                 pk_cols=list(pk_cols),
                 base_version=doc.get("base_version"),
                 delta_version=int(doc.get("delta_version", 0)),
@@ -656,6 +488,24 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         if n_deltas >= self.compact_every:
             self.compact(spark, name)
 
+    @staticmethod
+    def _widened_schema(actions: DataFrame, doc: dict) -> T.StructType:
+        """Registry schema after appending ``actions``: the SINK schema (no
+        _kind: that column exists only inside delta files; leaking it into
+        the registry would make base reads surface a phantom null column)
+        UNIONED with whatever ``doc`` already recorded. If a source stops
+        sending a column, overwriting with only the current batch's
+        (narrower) schema would silently null that column on base reads and
+        the next compact() would drop it permanently — the rewrite store
+        preserves dropped columns via unionByName(allowMissingColumns=True),
+        and this is the LSM analog (ADVICE r7)."""
+        new_schema = actions.drop(KIND_COL).schema
+        if not doc.get("schema"):
+            return new_schema
+        skip = {*new_schema.names, BUCKET_COL, KIND_COL}
+        prev = T.StructType.fromJson(doc["schema"])
+        return T.StructType(new_schema.fields + [f for f in prev.fields if f.name not in skip])
+
     def merge(
         self,
         spark: SparkSession,
@@ -663,7 +513,6 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         upserts: DataFrame,
         delete_keys: DataFrame,
         pk_cols: list[str],
-        affected: list[int] | None = None,
     ) -> None:
         """Split-API compatibility: fold upserts + deletes into one action
         frame (upsert wins over a same-batch delete of the same key, the
@@ -689,12 +538,10 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
 
     # --- read path ----------------------------------------------------------
     def exists(self, name: str) -> bool:
-        self._maybe_migrate_legacy(name)
-        doc = self._doc(name)
+        doc = self._pointer_doc(name)
         return doc.get("base_version") is not None or self._has_delta_files(name, doc)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame | None:
-        self._maybe_migrate_legacy(name)
         return self._read_state(spark, name)
 
     def _read_base(self, spark: SparkSession, name: str, doc: dict) -> DataFrame | None:
@@ -730,7 +577,7 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         consistent even while a concurrent compaction flips the pointer —
         and the version dirs it names are immutable, retained at least one
         further flip (the reader-retirement window)."""
-        doc = self._doc(name)
+        doc = self._pointer_doc(name)
         base = self._read_base(spark, name, doc)
         if not self._has_delta_files(name, doc):
             return base
@@ -767,9 +614,8 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         compaction ran. Crash safety: a base_v{K+1} written but never
         flipped is overwritten by the retry (same version number recomputed
         from the unmoved pointer) or swept as an orphan."""
-        self._maybe_migrate_legacy(name)
         with self._table_flock(name):
-            doc = self._doc(name)
+            doc = self._pointer_doc(name)
             if not self._has_delta_files(name, doc):
                 return False
             pk_cols = doc.get("pk_cols")
@@ -903,51 +749,8 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         re-registering 32-bucket files as INTO 16 BUCKETS makes Spark skip
         the exchange and silently match rows across wrong buckets. Takes
         the already-loaded registry doc — every caller holds one; the
-        hot-path merge must not re-parse _schema.json per lookup.
-
-        Legacy docs (laid out before n_buckets was persisted) must not
-        trust the constructor either (ADVICE r11: the first pointer flip
-        would persist a drifted value permanently): the count is backfilled
-        from the bucket ids Spark encoded into the data file names — the
-        same source _ensure_registered's CLUSTERED BY contract relies on.
-        max(id)+1 equals the laid-out count whenever the top bucket is
-        non-empty (any realistically-sized table under the hash); a table
-        so small its top buckets are all empty remains ambiguous, and the
-        derived count is still the safe declaration for the files present."""
-        try:
-            n = doc.get("n_buckets")
-            if n:
-                return int(n)
-        except (TypeError, ValueError):
-            pass
-        if doc:  # an existing layout with no persisted count: legacy doc
-            ids = self._file_bucket_ids(name, doc)
-            if ids:
-                return max(ids) + 1
-        return self.n_buckets
-
-    def _file_bucket_ids(self, name: str, doc: dict) -> list[int]:
-        """Bucket ids parsed from Spark-written bucketed file names
-        (``part-NNNNN-<uuid>_BBBBB.c000...parquet`` — the ``_BBBBB`` token
-        is the bucket id) across the pointer's current version dirs."""
-        import re
-
-        dirs = []
-        for kind in ("base", "delta"):
-            ver = doc.get(f"{kind}_version")
-            if ver is not None:
-                dirs.append(self._ver_path(name, kind, int(ver)))
-        ids: set[int] = set()
-        for d in dirs:
-            try:
-                files = os.listdir(d)
-            except OSError:
-                continue
-            for f in files:
-                m = re.search(r"_(\d{5})\.c\d{3}", f)
-                if m and f.endswith(".parquet"):
-                    ids.add(int(m.group(1)))
-        return sorted(ids)
+        hot-path merge must not re-parse _schema.json per lookup."""
+        return int(doc.get("n_buckets") or self.n_buckets)
 
     def _ensure_registered(
         self,
@@ -1044,7 +847,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         reload racing a streaming-triggered compaction would otherwise
         interleave two read-modify-write flips over one version dir."""
         with self._table_flock(name):
-            doc = self._doc(name)
+            doc = self._pointer_doc(name)
             prev_base = doc.get("base_version")
             new_ver = (int(prev_base) if prev_base is not None else -1) + 1
             self._write_bucketed(
@@ -1076,7 +879,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         delta_cols_now = [*sink_cols, KIND_COL, self.SEQ_COL]
         while True:
             with self._table_flock(name):
-                doc = self._doc(name)
+                doc = self._pointer_doc(name)
                 prev_delta_cols = doc.get("delta_cols")
                 if prev_delta_cols is None or prev_delta_cols == delta_cols_now:
                     next_seq, folded_seq = self._append_actions_locked(
@@ -1123,20 +926,10 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         self._write_bucketed(
             staged, name, "delta", delta_ver, pk_cols, "append", n_buckets=n_bkts
         )
-        # merged sink schema: same additive-evolution rule as the parent
-        new_schema = actions.drop(KIND_COL).schema
-        prev = self._read_schema(name)
-        if prev is not None:
-            new_names = set(new_schema.names)
-            merged = list(new_schema.fields) + [
-                f for f in prev.fields
-                if f.name not in new_names and f.name not in (BUCKET_COL, KIND_COL)
-            ]
-            new_schema = T.StructType(merged)
         folded_seq = int(doc.get("folded_seq", 0))
         self._update_registry(
             name,
-            schema=new_schema.jsonValue(),
+            schema=self._widened_schema(actions, doc).jsonValue(),
             pk_cols=list(pk_cols),
             bucketed=True,
             n_buckets=n_bkts,
@@ -1151,14 +944,14 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
 
     # --- read path -----------------------------------------------------------
     def exists(self, name: str) -> bool:
-        doc = self._doc(name)
+        doc = self._pointer_doc(name)
         return doc.get("base_version") is not None or doc.get("delta_cols") is not None
 
     def read(self, spark: SparkSession, name: str) -> DataFrame | None:
         return self._read_state(spark, name)
 
     def _read_state(self, spark: SparkSession, name: str) -> DataFrame | None:
-        doc = self._doc(name)
+        doc = self._pointer_doc(name)
         pk_cols = doc.get("pk_cols")
         base = None
         if doc.get("base_version") is not None:
@@ -1229,7 +1022,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
     # --- compaction ----------------------------------------------------------
     def compact(self, spark: SparkSession, name: str) -> bool:
         with self._table_flock(name):
-            doc = self._doc(name)
+            doc = self._pointer_doc(name)
             if doc.get("delta_cols") is None:
                 return False
             pk_cols = doc.get("pk_cols")

@@ -633,50 +633,6 @@ def test_dead_letter_path_distinct_for_sanitize_colliding_tokens(tmp_path):
     assert max(len(os.path.basename(p)) for p in (long_a, long_b)) < 255
 
 
-def test_dead_letter_drain_migrates_legacy_root_files(
-    spark, tmp_path, student_struct, student_mapping
-):
-    """A pre-upgrade queue has parquet files at the _dead_letter ROOT; the
-    current writers use batch= partition subdirs, and Spark refuses a mixed
-    layout. The drain must migrate root files aside and replay BOTH the
-    legacy and the new-style events (K6: failures never vanish across an
-    upgrade)."""
-    from mysql_hbase_replicator_spark.operators.cdc_apply import (
-        replay_dead_letters,
-    )
-
-    store = ParquetKeyedStore(str(tmp_path / "store"), n_buckets=4)
-    mappings = {"mixfs.student": student_mapping}
-    # new-style dead letter (missing PK) via the kernel
-    ev_df = events_from_rows(
-        spark, [ev(2, "insert", after=row(2, None, 50, "eve", "e"))], student_struct
-    )
-    apply_cdc_batch(spark, ev_df, store, mappings, batch_token="b0")
-    dl_dir = tmp_path / "store" / "_dead_letter"
-    assert any(p.name.startswith("batch=") for p in dl_dir.iterdir())
-    # legacy root-level file: same schema the old append writer produced
-    legacy = spark.createDataFrame(
-        [(9, "insert", "mixfs.student", "legacy reason",
-          '{"before": null, "after": {"sn": 3, "id": null}}', None, None, None)],
-        "position long, op string, table_name string, reason string, "
-        "payload string, included_before array<string>, "
-        "included_after array<string>, filename string",
-    )
-    legacy.coalesce(1).write.mode("append").parquet(str(tmp_path / "legacy_tmp"))
-    import shutil as _sh
-
-    for f in (tmp_path / "legacy_tmp").iterdir():
-        if f.name.endswith(".parquet"):
-            _sh.move(str(f), str(dl_dir / f.name))
-    # drain: both events still fail validation (missing PK) and are
-    # re-queued — but the read must succeed and see BOTH
-    res = replay_dead_letters(spark, store, mappings)
-    assert res is not None and res.dead_letter_count == 2
-    requeued = spark.read.parquet(str(dl_dir))
-    assert requeued.count() == 2
-    assert sorted(r.position for r in requeued.collect()) == [2, 9]
-
-
 def test_pipeline_lineage_token_scopes_dead_letter_batches(tmp_path):
     """Batch ids restart at 0 for a fresh checkpoint, so kernel batch
     tokens must carry a checkpoint-lineage component: same checkpoint →

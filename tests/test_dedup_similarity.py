@@ -1278,80 +1278,6 @@ def test_hive_index_floor_does_not_retrigger_compaction(spark, tmp_path):
     assert not dd._needs_compaction([dd.index_dir])
 
 
-def test_flat_shingle_store_migrates_on_restart(spark, tmp_path):
-    """Restart compat (r16 review): a shingle store persisted by the
-    pre-hive layout (flat part files, no sbucket column) must be migrated
-    in place before the first re-rank screen — the partition filter would
-    otherwise raise UNRESOLVED_COLUMN and hive appends beside root files
-    would corrupt partition discovery."""
-    import os
-    import shutil
-
-    from mysql_hbase_replicator_spark.operators.dedup_stream import (
-        IncrementalDeduper,
-    )
-
-    idx = str(tmp_path / "idx")
-    base = (
-        "the quick brown fox jumps over the lazy dog near the old river bank "
-        "while seven wizards brew strong coffee under a pale winter moon today"
-    )
-    near = base.replace("today", "tonight")
-    fresh = (
-        "completely different subject matter entirely about spark shuffles "
-        "parquet column pruning adaptive query execution and broadcast joins"
-    )
-    dd = IncrementalDeduper(spark, idx, rerank_threshold=0.3)
-    b1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    assert [r.doc_id for r in dd.process_batch(b1).collect()] == [1]
-    # rewrite the shingle store to the pre-r16 flat layout
-    flat = str(tmp_path / "flat")
-    spark.read.parquet(dd.shingle_dir).drop("sbucket").coalesce(1).write.parquet(flat)
-    shutil.rmtree(dd.shingle_dir)
-    os.replace(flat, dd.shingle_dir)
-    assert any(f.endswith(".parquet") for f in os.listdir(dd.shingle_dir))
-    # a fresh deduper on the old layout must still re-rank correctly
-    dd2 = IncrementalDeduper(spark, idx, rerank_threshold=0.3)
-    b2 = spark.createDataFrame(
-        [(10, near), (11, fresh)], "doc_id long, text string"
-    )
-    assert sorted(r.doc_id for r in dd2.process_batch(b2).collect()) == [11]
-    # and the store was upgraded: sbucket= dirs, no root-level part files
-    assert not any(f.endswith(".parquet") for f in os.listdir(dd2.shingle_dir))
-    assert any(d.startswith("sbucket=") for d in os.listdir(dd2.shingle_dir))
-
-
-def test_flat_semantic_index_migrates_on_restart(spark, tmp_path):
-    """Same restart-compat path for the semantic index: pre-r16 stores
-    carry cell as a plain data column in flat part files; hive cell=
-    appends beside them would break partition discovery."""
-    import os
-    import shutil
-
-    from mysql_hbase_replicator_spark.operators.dedup_stream import (
-        IncrementalSemanticDeduper,
-    )
-
-    idx = str(tmp_path / "semidx")
-    dd = IncrementalSemanticDeduper(spark, idx, threshold=0.9, n_cells=2)
-    b1 = _vec_df(spark, [(0, (1, 0, 0, 0)), (1, (0, 1, 0, 0))])
-    assert dd.process_batch(b1).count() == 2
-    # flatten: cell becomes a data column in root-level part files
-    flat = str(tmp_path / "flat")
-    spark.read.parquet(idx).coalesce(1).write.parquet(flat)
-    shutil.rmtree(idx)
-    os.replace(flat, idx)
-    assert any(f.endswith(".parquet") for f in os.listdir(idx))
-    dd2 = IncrementalSemanticDeduper(spark, idx, threshold=0.9, n_cells=2)
-    # redelivery screens against the migrated index: nothing re-admitted
-    assert dd2.process_batch(b1).count() == 0
-    # novel direction still admitted; layout is hive again
-    got = dd2.process_batch(_vec_df(spark, [(7, (0, 0, 1, 0))]))
-    assert [r.vec_id for r in got.collect()] == [7]
-    assert not any(f.endswith(".parquet") for f in os.listdir(idx))
-    assert any(d.startswith("cell=") for d in os.listdir(idx))
-
-
 def test_semantic_centroid_cache_is_driver_resident(spark, tmp_path):
     """The cached frozen-centroid frame must be rebuilt from driver-held
     rows (LocalTableScan), not a lifetime localCheckpoint — checkpoint

@@ -721,46 +721,6 @@ def test_bucketed_n_buckets_persisted_across_reopen(spark, tmp_path):
     assert drifted._doc("t").get("n_buckets") == 4
 
 
-def test_bucketed_legacy_doc_backfills_n_buckets_from_files(spark, tmp_path):
-    """A registry doc that predates n_buckets persistence (legacy layout)
-    must not trust a drifted constructor value either (ADVICE r11): the
-    count is recovered from the bucket ids Spark wrote into the data file
-    names, and the next registry write persists it — the silent
-    cross-bucket-match hazard does not become permanent."""
-    import json as _json
-
-    from mysql_hbase_replicator_spark.operators.merge import (
-        BucketedLogStructuredKeyedStore,
-    )
-
-    path = str(tmp_path / "bkt")
-    bkt = BucketedLogStructuredKeyedStore(path, n_buckets=4)
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(64)], "k int, v string"
-    )
-    bkt.overwrite(spark, "t", base, ["k"])
-    # simulate a legacy doc: strip the persisted count
-    reg = bkt._schema_path("t")
-    doc = _json.load(open(reg))
-    del doc["n_buckets"]
-    with open(reg, "w") as f:
-        _json.dump(doc, f)
-    for row_ in spark.sql("SHOW TABLES").collect():
-        if row_.tableName.startswith(f"lsm_{bkt._digest}_"):
-            spark.sql(f"DROP TABLE {row_.tableName}")
-    drifted = BucketedLogStructuredKeyedStore(path, n_buckets=8)
-    # 64 keys over 4 buckets: every bucket is non-empty, so max(id)+1 = 4
-    assert drifted._bucket_count("t", drifted._doc("t")) == 4
-    ups = spark.createDataFrame([(1, "new")], "k int, v string")
-    drifted.merge(spark, "t", ups, spark.createDataFrame([(2,)], "k int"), ["k"])
-    got = dict(
-        (r.k, r.v) for r in drifted.read(spark, "t").select("k", "v").collect()
-    )
-    assert got[1] == "new" and 2 not in got and len(got) == 63
-    # the backfilled count is now persisted for good
-    assert drifted._doc("t").get("n_buckets") == 4
-
-
 def test_bucketed_sweep_keeps_one_previous_version(
     spark, tmp_path, student_struct, student_mapping
 ):
@@ -884,185 +844,40 @@ def test_lsm_read_base_uses_doc_snapshot_schema(spark, tmp_path):
     assert [tuple(r) for r in got.select("k", "v").collect()] == [(1, "a")]
 
 
-def test_lsm_migrates_legacy_layout(spark, tmp_path):
-    """r13 review: a table dir written under the pre-pointer layout (bucket
-    dirs directly in table_path + _delta/ — also exactly what the REWRITE
-    store writes) must be upgraded in place, not silently read as empty.
-    This doubles as the rewrite→LSM conversion path."""
+def test_lsm_refuses_rewrite_store_table(spark, tmp_path):
+    """A table the rewrite store wrote keeps its bucket dirs outside any
+    version dir and a registry with no version pointer. Opened as an LSM
+    store it is refused by name, never read as empty or appended to. Store
+    entries that are not tables still read as an empty doc: the benchmark's
+    byte count calls ``_doc`` on every entry of the store directory."""
+    import json as _json
+
     from mysql_hbase_replicator_spark.operators.merge import KIND_COL
 
     path = str(tmp_path / "store")
     rw = ParquetKeyedStore(path, n_buckets=4)
     rw.overwrite(
-        spark,
-        "t",
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        ["k"],
+        spark, "t", spark.createDataFrame([(1, "a")], "k int, v string"), ["k"]
     )
-    # handcraft a legacy delta: upsert k=2 -> b2, delete k=1
-    legacy_delta = os.path.join(rw.table_path("t"), "_delta", "_lsm_seq=0")
-    spark.createDataFrame(
-        [(2, "b2", "upsert"), (1, None, "delete")], f"k int, v string, {KIND_COL} string"
-    ).write.mode("overwrite").parquet(legacy_delta)
-
     lsm = LogStructuredKeyedStore(path, n_buckets=4)
-    assert lsm.exists("t")  # triggers the migration
-    got = sorted(tuple(r) for r in lsm.read(spark, "t").select("k", "v").collect())
-    assert got == [(2, "b2")]
-    # layout upgraded in place: versioned dirs + pointer, legacy dirs gone
-    doc = lsm._doc("t")
-    assert doc.get("base_version") == 0 and doc.get("delta_version") == 0
-    assert os.path.isdir(lsm._ver_path("t", "base", 0))
-    assert not os.path.isdir(os.path.join(lsm.table_path("t"), "_delta"))
-    assert not any(
-        e.startswith("_bucket=") for e in os.listdir(lsm.table_path("t"))
+    with pytest.raises(ValueError, match="'t'"):
+        lsm.exists("t")
+    with pytest.raises(ValueError, match="'t'"):
+        lsm.read(spark, "t")
+    actions = spark.createDataFrame(
+        [(2, "b", "upsert")], f"k int, v string, {KIND_COL} string"
     )
-    # and the full lifecycle keeps working on the migrated table
-    ups = spark.createDataFrame([(3, "c")], "k int, v string")
-    lsm.merge(spark, "t", ups, spark.createDataFrame([], "k int"), ["k"])
-    assert lsm.compact(spark, "t") is True
-    got2 = sorted(tuple(r) for r in lsm.read(spark, "t").select("k", "v").collect())
-    assert got2 == [(2, "b2"), (3, "c")]
+    with pytest.raises(ValueError, match="'t'"):
+        lsm.merge_actions(spark, "t", actions, ["k", "v"], ["k"])
+    assert not os.path.isdir(lsm._ver_path("t", "delta", 0))
+    assert [tuple(r) for r in rw.read(spark, "t").select("k", "v").collect()] == [
+        (1, "a")
+    ]
 
-
-def _legacy_table(spark, path: str, rows, n_buckets: int = 4) -> ParquetKeyedStore:
-    rw = ParquetKeyedStore(path, n_buckets=n_buckets)
-    rw.overwrite(
-        spark, "t", spark.createDataFrame(rows, "k int, v string"), ["k"]
-    )
-    return rw
-
-
-def test_lsm_finishes_legacy_crash_after_live_moved_aside(spark, tmp_path):
-    """r13 review: a table crashed by the OLD release's rename protocol
-    between its two swap renames — live dir renamed to .pre-compact,
-    completed staging still at .compacting — silently read as EMPTY under
-    the pointer upgrade (and the next batch would orphan the data forever).
-    The upgrade must finish the old recovery first: completed staging is
-    the new truth."""
-    import shutil
-
-    path = str(tmp_path / "store")
-    rw = _legacy_table(spark, path, [(1, "a"), (2, "b")])
-    tp = rw.table_path("t")
-    # the compacted state the old release staged (here: same rows re-written)
-    staging = tp + ".compacting"
-    shutil.copytree(tp, staging)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    os.rename(tp, tp + ".pre-compact")  # crash after rename 1, before rename 2
-
-    lsm = LogStructuredKeyedStore(path, n_buckets=4)
-    assert lsm.exists("t")
-    got = sorted(tuple(r) for r in lsm.read(spark, "t").select("k", "v").collect())
-    assert got == [(1, "a"), (2, "b")]
-    assert not os.path.isdir(tp + ".compacting")
-    assert not os.path.isdir(tp + ".pre-compact")
-    assert lsm._doc("t").get("delta_version") == 0  # migrated to the pointer
-
-
-def test_lsm_resumes_crashed_promote_without_data_loss(spark, tmp_path):
-    """ADVICE r13 (medium): ``_promote`` moves staged entries into live one
-    rename at a time, so a crash mid-move used to leave live holding a
-    partial copy — and the next recovery pass, seeing live_has_data=True,
-    rmtree'd the source dir still holding the unmoved remainder (silent
-    data loss; listdir order moving _SUCCESS first also flipped staged_ok
-    False on retry). The ``.promoting`` marker now records the in-flight
-    source before the first rename, and recovery FINISHES the move."""
-    import shutil
-
-    path = str(tmp_path / "store")
-    rows = [(i, chr(ord("a") + i)) for i in range(6)]
-    rw = _legacy_table(spark, path, rows)
-    tp = rw.table_path("t")
-    staging = tp + ".compacting"
-    shutil.copytree(tp, staging)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    # old protocol ran to completion on the live side (renamed aside and
-    # dropped), then the NEW recovery began promoting staging and crashed
-    # mid-move: marker written, _SUCCESS + one bucket dir already in live,
-    # the remaining bucket dirs (and the registry file) still staged
-    os.rename(tp, tp + ".pre-compact")
-    shutil.rmtree(tp + ".pre-compact")
-    with open(tp + ".promoting", "w") as f:
-        f.write(".compacting")
-    os.makedirs(tp)
-    staged = sorted(os.listdir(staging))
-    first_bucket = next(e for e in staged if e.startswith("_bucket="))
-    for e in ("_SUCCESS", first_bucket):
-        os.rename(os.path.join(staging, e), os.path.join(tp, e))
-    assert any(e.startswith("_bucket=") for e in os.listdir(staging))
-
-    lsm = LogStructuredKeyedStore(path, n_buckets=4)
-    got = sorted(tuple(r) for r in lsm.read(spark, "t").select("k", "v").collect())
-    assert got == sorted(rows)
-    assert not os.path.exists(tp + ".promoting")
-    assert not os.path.isdir(staging)
-
-
-def test_lsm_clears_dangling_promote_marker(spark, tmp_path):
-    """A crash AFTER the source dir was swept but before the marker was
-    removed leaves a dangling marker: recovery clears it and the table
-    reads normally."""
-    path = str(tmp_path / "store")
-    rw = _legacy_table(spark, path, [(1, "a"), (2, "b")])
-    tp = rw.table_path("t")
-    with open(tp + ".promoting", "w") as f:
-        f.write(".compacting")
-
-    lsm = LogStructuredKeyedStore(path, n_buckets=4)
-    got = sorted(tuple(r) for r in lsm.read(spark, "t").select("k", "v").collect())
-    assert got == [(1, "a"), (2, "b")]
-    assert not os.path.exists(tp + ".promoting")
-
-
-def test_lsm_restores_pre_compact_when_staging_incomplete(spark, tmp_path):
-    """Defensive tightening of the old protocol: live dir gone, staging has
-    NO _SUCCESS — the .pre-compact dir is the only surviving copy and must
-    be restored, never rmtree'd."""
-    import shutil
-
-    path = str(tmp_path / "store")
-    rw = _legacy_table(spark, path, [(1, "a"), (2, "b")])
-    tp = rw.table_path("t")
-    staging = tp + ".compacting"
-    os.makedirs(staging)  # incomplete: no _SUCCESS, no data
-    os.rename(tp, tp + ".pre-compact")
-
-    lsm = LogStructuredKeyedStore(path, n_buckets=4)
-    got = sorted(tuple(r) for r in lsm.read(spark, "t").select("k", "v").collect())
-    assert got == [(1, "a"), (2, "b")]
-    assert not os.path.isdir(tp + ".compacting")
-    assert not os.path.isdir(tp + ".pre-compact")
-
-
-def test_lsm_sweeps_stale_crash_dirs_on_pointered_table(spark, tmp_path):
-    """Crash dirs predating the pointer upgrade on a table that ALREADY
-    migrated are stale garbage: the pointer data wins and the leftovers are
-    swept, never promoted over it."""
-    import shutil
-
-    path = str(tmp_path / "store")
-    rw = _legacy_table(spark, path, [(9, "stale")])
-    tp = rw.table_path("t")
-    stale = str(tmp_path / "stale_copy")
-    shutil.copytree(tp, stale)
-
-    lsm = LogStructuredKeyedStore(path, n_buckets=4)
-    assert lsm.exists("t")  # migrates to the pointer layout
-    lsm.merge(
-        spark,
-        "t",
-        spark.createDataFrame([(1, "live")], "k int, v string"),
-        spark.createDataFrame([], "k int"),
-        ["k"],
-    )
-    # now drop pre-upgrade crash leftovers beside the pointered table
-    shutil.copytree(stale, tp + ".compacting")
-    open(os.path.join(tp + ".compacting", "_SUCCESS"), "w").close()
-    shutil.copytree(stale, tp + ".pre-compact")
-
-    lsm2 = LogStructuredKeyedStore(path, n_buckets=4)
-    got = sorted(tuple(r) for r in lsm2.read(spark, "t").select("k", "v").collect())
-    assert got == [(1, "live"), (9, "stale")]
-    assert not os.path.isdir(tp + ".compacting")
-    assert not os.path.isdir(tp + ".pre-compact")
+    os.makedirs(os.path.join(path, "_dead_letter", "batch=b0.0000"))
+    with open(os.path.join(path, "_checkpoint.json"), "w") as f:
+        _json.dump({"position": 1, "filename": None}, f)
+    assert os.path.exists(lsm._lock_path("t"))  # left by the refused append
+    for entry in os.listdir(path):
+        if entry != "t":
+            assert lsm._doc(entry) == {}, entry
