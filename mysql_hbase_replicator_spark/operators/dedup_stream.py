@@ -26,18 +26,15 @@ still no all-pairs product.
 Used inside foreachBatch (the CDC pipeline pattern) or called directly on
 batch DataFrames, as in the tests.
 
-Index maintenance: each admitted batch appends a few small parquet files, so
-an unattended stream accumulates unbounded file counts (scheduler + file-open
-overhead, tiny scans). When any one directory's file count exceeds
-``max_files`` (for a hive-partitioned store the per-dir count is what
-compaction can actually improve; for a flat store the one directory holds
-everything, the original semantics) the index is compacted — rewritten into
-``n_compact_partitions`` key-partitioned files via an atomic directory
-swap. A crash at any point leaves a
-recoverable index: the swap retires the old directory BEFORE promoting the
-staged one, and recovery (run before every screen/compact) restores the
-retired copy if the promotion never happened. Screening results are
-unaffected: compaction only reorganizes rows.
+Index maintenance: each store is a ``versioned.VersionedRoot`` — rows in
+``<root>/index_v<K>`` behind a pointer doc — and each admitted batch appends
+a few small parquet files into the current version. When a directory's file
+count would exceed ``max_files``, the current version plus the batch is
+rewritten into ``n_compact_partitions`` key-partitioned files as
+``index_v<K+1>`` and the pointer flips; ``index_v<K>`` survives one more
+flip, so a reader holding it finishes its scan, and a crash before the flip
+leaves the pointer on it. Screening results are unaffected: compaction only
+reorganizes rows.
 """
 
 from __future__ import annotations
@@ -49,16 +46,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_hbase_replicator_spark.operators.dedup import band_hashes, hashed_shingles
+from mysql_hbase_replicator_spark.operators.versioned import POINTER_DOC, VersionedRoot
 from mysql_hbase_replicator_spark.plans.registry import query
 
 
 class _CompactingIndexBase:
     """The persistent-parquet-index scaffold shared by the incremental
-    dedupers: crash-safe compaction over an append-only directory (stage →
-    retire → promote → drop, recoverable at any crash point)."""
+    dedupers: appends into a store's current version, and one rewrite body
+    (``_rewrite``) for the ``max_files`` breach and ``compact()``. The live
+    version is never renamed under a reader; nothing needs recovery."""
+
+    KIND = "index"
 
     spark: SparkSession
     index_dir: str
+    max_files: int
     n_compact_partitions: int
 
     def _parquet_files(self, root: str) -> list[str]:
@@ -71,8 +73,29 @@ class _CompactingIndexBase:
             if f.endswith(".parquet")
         ]
 
+    def _store(self, root: str) -> tuple[VersionedRoot, dict]:
+        """The store at ``root`` and its pointer doc (``{}`` before the first
+        write). A root with parquet files but no pointer doc has the
+        unversioned layout; read as empty it would re-admit every document,
+        so it is refused (checked only when the doc is empty)."""
+        versions = VersionedRoot(root)
+        doc = versions.doc()
+        if not doc and self._parquet_files(root):
+            raise ValueError(
+                f"dedup index {root} holds parquet files but no pointer doc "
+                f"({POINTER_DOC}): it was written by the unversioned index "
+                f"layout; rebuild the index into a fresh directory"
+            )
+        return versions, doc
+
+    def _live_dir(self, root: str) -> str:
+        """The current version dir of the store at ``root`` (``index_v0``,
+        possibly not yet written, before the first write)."""
+        versions, doc = self._store(root)
+        return versions.path(self.KIND, int(doc.get(self.KIND, 0)))
+
     def _data_files(self) -> list[str]:
-        return self._parquet_files(self.index_dir)
+        return self._parquet_files(self._live_dir(self.index_dir))
 
     def _dir_counts(self, root: str) -> dict[str, int]:
         counts: dict[str, int] = {}
@@ -81,25 +104,11 @@ class _CompactingIndexBase:
             counts[d] = counts.get(d, 0) + 1
         return counts
 
-    def _needs_compaction(self, roots: list[str]) -> bool:
-        """``max_files`` bounds the file count PER DIRECTORY, not the
-        store total: a hive-partitioned store has a permanent floor of
-        one file per occupied partition dir (the best any compaction can
-        achieve), so comparing the TOTAL against max_files would
-        degenerate into a full-index rewrite on EVERY trigger once the
-        occupied-dir count crosses max_files (e.g. the exact deduper's 64
-        fbucket dirs vs the default max_files=64 — r16 review). For flat
-        layouts every file shares one directory, so this is exactly the
-        original total-count semantics."""
-        for root in roots:
-            counts = self._dir_counts(root)
-            if counts and max(counts.values()) > self.max_files:
-                return True
-        return False
-
     def _predicted_compaction(self, root: str, touched) -> bool:
-        """Would the store exceed ``max_files`` files in some directory
-        AFTER appending this batch? Decided BEFORE the append so the
+        """Would the store version at ``root`` exceed ``max_files`` files in
+        some directory AFTER appending this batch? Per directory, because a
+        hive store's floor is one file per occupied dir (r16 review).
+        Decided BEFORE the append so the
         append+compact write pair can collapse into one staged rewrite
         (r17, guide §2.6 — the drains' per-trigger floor is driver/job
         latency, and the oracle rows compact after every append by
@@ -127,7 +136,7 @@ class _CompactingIndexBase:
 
     def _append_or_rewrite(
         self,
-        live_dir: str,
+        root: str,
         new_rows: DataFrame,
         partition_cols: list[str],
         dedupe: bool = False,
@@ -135,47 +144,85 @@ class _CompactingIndexBase:
         schema: str | None = None,
         touched=None,
     ) -> bool:
-        """ONE write job per store per trigger: plain append while the
-        post-append file counts stay within ``max_files``, otherwise write
-        (live ∪ new) straight to the staging dir and swap — the same
-        stage → retire → promote protocol as ``_compact_dir`` and the
-        same final layout the old append-then-compact pair produced (the
-        union rewrite IS the compaction, with the batch's rows riding
-        along instead of being written twice and re-read). Crash before
-        the promote equals crash before the old append: the batch
-        replays and re-screens; the retired/staging residue is reclaimed
-        by ``_recover`` exactly as for compaction. Returns True when the
-        fused rewrite ran (callers hook compaction-cadence side effects —
-        the semantic occupancy alarm — on it)."""
-        fused = bool(self._parquet_files(live_dir)) and self._predicted_compaction(
-            live_dir, touched
+        """ONE write job per store per trigger: plain append into the
+        current version while the post-append file counts stay within
+        ``max_files``, otherwise ``_rewrite`` of (live ∪ new) — the union
+        rewrite IS the compaction, with the batch's rows riding along
+        instead of being written twice and re-read. A crash before the
+        pointer flip equals a crash before the append: the batch replays
+        and re-screens against the unmoved version. A store's pointer doc
+        is written before its first data file. Returns True when the
+        rewrite ran (callers hook the semantic occupancy alarm on it)."""
+        versions, doc = self._store(root)
+        if not doc:
+            doc = versions.write({self.KIND: 0})
+        live = versions.path(self.KIND, int(doc[self.KIND]))
+        fused = bool(self._parquet_files(live)) and self._predicted_compaction(
+            live, touched
         )
         if fused:
-            staging, retired = live_dir + ".compacting", live_dir + ".retired"
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            frame = reader.parquet(live_dir).unionByName(new_rows)
-            if dedupe:
-                frame = frame.distinct()
-            writer = frame.repartition(
-                self.n_compact_partitions, *(dir_partition_by or partition_cols)
-            ).write.mode("overwrite")
-            if dir_partition_by:
-                writer = writer.partitionBy(*dir_partition_by)
-            writer.parquet(staging)
-            os.replace(live_dir, retired)
-            os.replace(staging, live_dir)
-            shutil.rmtree(retired)
+            self._rewrite(root, new_rows, partition_cols, dedupe, dir_partition_by, schema)
         elif dir_partition_by:
             # dir-aligned append: one file per touched partition dir (see
-            # _compact_dir's alignment note)
+            # _rewrite's alignment note)
             new_rows.repartition(
                 self.n_compact_partitions, *dir_partition_by
-            ).write.mode("append").partitionBy(*dir_partition_by).parquet(live_dir)
+            ).write.mode("append").partitionBy(*dir_partition_by).parquet(live)
         else:
-            new_rows.write.mode("append").parquet(live_dir)
+            new_rows.write.mode("append").parquet(live)
         return fused
+
+    def _rewrite(
+        self,
+        root: str,
+        new_rows: DataFrame | None,
+        partition_cols: list[str],
+        dedupe: bool = False,
+        dir_partition_by: list[str] | None = None,
+        schema: str | None = None,
+    ) -> int:
+        """Write the store's current version ``index_v<K>`` (plus
+        ``new_rows``, when given) as ``index_v<K+1>``, flip the pointer and
+        sweep. Returns the new version's file count; 0, with nothing
+        written, when the store holds no data. ``dedupe`` drops
+        exact-duplicate rows during the rewrite — the shingle store can
+        accumulate a doc's set twice when a crash between process_batch's
+        two appends is replayed (see the append-order note there); the band
+        index tolerates duplicates (candidates are distinct'd) so it skips
+        the shuffle. ``dir_partition_by`` writes the new version as
+        DIRECTORY partitions (hive layout) so screening joins can
+        partition-prune the index.
+
+        When ``dir_partition_by`` is set the repartition MUST align with it:
+        hash-partitioning on the directory column puts each hive dir's rows
+        in exactly one task → one file per dir. Repartitioning on the join
+        key instead (the r16 first cut) made EVERY task write a file into
+        EVERY dir — n_compact_partitions × n_buckets tiny files per
+        compaction (measured: 256 files and a 2× drain wall on the exact
+        deduper's oracle row, which compacts after every append)."""
+        versions, doc = self._store(root)
+        ver = int(doc.get(self.KIND, 0))
+        live = versions.path(self.KIND, ver)
+        if not self._parquet_files(live):
+            return 0
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        frame = reader.parquet(live)
+        if new_rows is not None:
+            frame = frame.unionByName(new_rows)
+        if dedupe:
+            frame = frame.distinct()
+        writer = frame.repartition(
+            self.n_compact_partitions, *(dir_partition_by or partition_cols)
+        ).write.mode("overwrite")
+        if dir_partition_by:
+            writer = writer.partitionBy(*dir_partition_by)
+        out = versions.path(self.KIND, ver + 1)
+        writer.parquet(out)
+        versions.write({self.KIND: ver + 1})
+        versions.sweep({self.KIND: ver + 1})
+        return len(self._parquet_files(out))
 
     def _pruned_read(
         self,
@@ -212,65 +259,6 @@ class _CompactingIndexBase:
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(live_dir).filter(F.col(dir_col).isin(keys))
-
-    def _recover(self, live_dir: str) -> None:
-        """Reclaim a crashed compaction pass for one directory. If the crash
-        hit between retire and promote, the '.retired' copy is the ONLY
-        surviving index — restore it. Only '.compacting' (never promoted,
-        possibly incomplete) is unconditionally deleted."""
-        staging, retired = live_dir + ".compacting", live_dir + ".retired"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        if os.path.isdir(retired):
-            if not os.path.isdir(live_dir):
-                os.replace(retired, live_dir)
-            else:
-                shutil.rmtree(retired)  # promotion completed; copy is stale
-
-    def _compact_dir(
-        self,
-        live_dir: str,
-        partition_cols: list[str],
-        dedupe: bool = False,
-        dir_partition_by: list[str] | None = None,
-        schema: str | None = None,
-    ) -> int:
-        """Atomic swap: stage → retire old → promote staged → drop retired.
-        ``dedupe`` drops exact-duplicate rows during the rewrite — the
-        shingle store can accumulate a doc's set twice when a crash between
-        process_batch's two appends is replayed (see the append-order note
-        there); the band index tolerates duplicates (candidates are
-        distinct'd) so it skips the shuffle. ``dir_partition_by`` writes
-        the staged copy as DIRECTORY partitions (hive layout) so screening
-        joins can dynamic-partition-prune the index.
-
-        When ``dir_partition_by`` is set the repartition MUST align with it:
-        hash-partitioning on the directory column puts each hive dir's rows
-        in exactly one task → one file per dir. Repartitioning on the join
-        key instead (the r16 first cut) made EVERY task write a file into
-        EVERY dir — n_compact_partitions × n_buckets tiny files per
-        compaction (measured: 256 files and a 2× drain wall on the exact
-        deduper's oracle row, which compacts after every append)."""
-        self._recover(live_dir)
-        if not self._parquet_files(live_dir):
-            return 0
-        staging, retired = live_dir + ".compacting", live_dir + ".retired"
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        frame = reader.parquet(live_dir)
-        if dedupe:
-            frame = frame.distinct()
-        writer = frame.repartition(
-            self.n_compact_partitions, *(dir_partition_by or partition_cols)
-        ).write.mode("overwrite")
-        if dir_partition_by:
-            writer = writer.partitionBy(*dir_partition_by)
-        writer.parquet(staging)
-        os.replace(live_dir, retired)
-        os.replace(staging, live_dir)
-        shutil.rmtree(retired)
-        return len(self._parquet_files(live_dir))
 
 
 class IncrementalDeduper(_CompactingIndexBase):
@@ -313,20 +301,21 @@ class IncrementalDeduper(_CompactingIndexBase):
         """Rewrite the index (and, in re-rank mode, the shingle store) into
         n_compact_partitions join-aligned files each. Returns the resulting
         band-index file count."""
-        n = self._compact_dir(
-            self.index_dir, ["band_idx", "band_hash"], schema=self.INDEX_SCHEMA
+        n = self._rewrite(
+            self.index_dir, None, ["band_idx", "band_hash"], schema=self.INDEX_SCHEMA
         )
         if self.rerank_threshold is not None:
-            self._compact_dir(
-                self.shingle_dir, ["doc_id"], dedupe=True,
+            self._rewrite(
+                self.shingle_dir, None, ["doc_id"], dedupe=True,
                 dir_partition_by=["sbucket"], schema=self.SHINGLE_SCHEMA,
             )
         return n
 
     def _index(self) -> DataFrame | None:
-        if not self._data_files():
+        live = self._live_dir(self.index_dir)
+        if not self._parquet_files(live):
             return None
-        return self.spark.read.schema(self.INDEX_SCHEMA).parquet(self.index_dir)
+        return self.spark.read.schema(self.INDEX_SCHEMA).parquet(live)
 
     def _rejected(self, bands: DataFrame, hashed: DataFrame) -> DataFrame:
         """The (doc_id) rows to reject for this batch — band-level verdicts,
@@ -368,7 +357,8 @@ class IncrementalDeduper(_CompactingIndexBase):
         # — inflating Jaccard past the threshold for every pair involving
         # it, falsely rejecting genuine sub-threshold neighbours (r13
         # review). The batch doc-id set is small → broadcast anti-join.
-        if not self._parquet_files(self.shingle_dir):
+        shingles = self._live_dir(self.shingle_dir)
+        if not self._parquet_files(shingles):
             prior_sh = hashed
         else:
             # prune the store to CANDIDATE priors before anything touches
@@ -384,7 +374,7 @@ class IncrementalDeduper(_CompactingIndexBase):
             ).distinct()
             pruned = (
                 self._pruned_read(
-                    self.shingle_dir,
+                    shingles,
                     "sbucket",
                     cand_priors.select(
                         F.pmod("doc_id", F.lit(self.SHINGLE_BUCKETS))
@@ -424,9 +414,6 @@ class IncrementalDeduper(_CompactingIndexBase):
         docs; their bands (and shingle hashes, in re-rank mode) are appended
         to the index. Within-batch dups keep the lowest doc_id
         (deterministic)."""
-        self._recover(self.index_dir)
-        if self.rerank_threshold is not None:
-            self._recover(self.shingle_dir)
         # idle polls (empty batches) return immediately — otherwise every
         # empty trigger appends an empty parquet file to the band index
         # (and shingle store), inflating file counts and compaction churn
@@ -505,9 +492,9 @@ class IncrementalExactDeduper(_CompactingIndexBase):
     Redelivered docs fingerprint-match their own indexed row and are
     rejected, so an at-least-once source never double-admits. Crash
     safety: one append per batch AFTER the rejected set is eagerly
-    materialized; compaction inherits the stage → retire → promote swap
-    (dedupe=True — a replayed append can store a fingerprint twice, and
-    unlike the band index the fp store is semantically a SET)."""
+    materialized; compaction writes the next index version and flips the
+    pointer (dedupe=True — a replayed append can store a fingerprint twice,
+    and unlike the band index the fp store is semantically a SET)."""
 
     FP_BUCKETS = 64
     INDEX_SCHEMA = "fp long, fbucket int"
@@ -525,8 +512,8 @@ class IncrementalExactDeduper(_CompactingIndexBase):
         self.n_compact_partitions = n_compact_partitions
 
     def compact(self) -> int:
-        return self._compact_dir(
-            self.index_dir, ["fp"], dedupe=True, dir_partition_by=["fbucket"],
+        return self._rewrite(
+            self.index_dir, None, ["fp"], dedupe=True, dir_partition_by=["fbucket"],
             schema=self.INDEX_SCHEMA,
         )
 
@@ -543,7 +530,6 @@ class IncrementalExactDeduper(_CompactingIndexBase):
         fused union rewrite when compaction would have followed)."""
         from mysql_hbase_replicator_spark.operators.dedup import shingle_h0
 
-        self._recover(self.index_dir)
         fps = (
             docs.select("doc_id", shingle_h0(F.col("text")).alias("fp"))
             .withColumn(
@@ -565,9 +551,10 @@ class IncrementalExactDeduper(_CompactingIndexBase):
             .select("doc_id")
         )
         dups = in_batch
-        if self._data_files():
+        live = self._live_dir(self.index_dir)
+        if self._parquet_files(live):
             index = self._pruned_read(
-                self.index_dir, "fbucket", buckets, schema=self.INDEX_SCHEMA
+                live, "fbucket", buckets, schema=self.INDEX_SCHEMA
             )
             # inner join, batch side broadcast (BuildLeft is not supported
             # for left-semi, and the trailing distinct dedupes multi-row
@@ -622,11 +609,13 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
     above). Redelivered vectors cosine-match their own indexed copy at 1.0
     and are rejected, so an at-least-once source never double-admits.
 
-    Crash safety: one index append per batch, AFTER the rejected set is
-    eagerly materialized — a crash before the append replays cleanly (the
-    batch re-screens and re-admits); the centroid table is written to a
+    Crash safety: one index write per batch, AFTER the rejected set is
+    eagerly materialized — a crash before the append, or before a
+    rewrite's pointer flip, replays cleanly (the batch re-screens against
+    the unmoved version and re-admits); the centroid table is written to a
     staging dir and os.replace'd, so it exists either fully or not at all.
-    Compaction inherits the stage → retire → promote swap."""
+    A compaction writes the next index version and flips the pointer, so a
+    reader holding the previous version finishes its scan."""
 
     CENT_SUFFIX = ".centroids"
     INDEX_SCHEMA = "vec_id long, embedding array<float>, nsq double, cell int"
@@ -742,7 +731,8 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
             .filter(F.col("prior_id") < F.col("vec_id"))
             .select("vec_id", "cell", "emb_p", "nsq_p", "embedding", "nsq")
         )
-        if self._data_files():
+        live = self._live_dir(self.index_dir)
+        if self._parquet_files(live):
             # Two explicit prunes, both load-bearing at corpus scale (r16):
             # (a) the index read is statically filtered to the CELLS THIS
             # BATCH TOUCHES — the index is stored as cell= directory
@@ -759,7 +749,7 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
             # not O(|index|).
             vs_index = F.broadcast(assigned).join(
                 self._pruned_read(
-                    self.index_dir, "cell", cells,
+                    live, "cell", cells,
                     schema=self.INDEX_SCHEMA,
                 ).select(
                     "cell",
@@ -793,8 +783,8 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
         """Rewrite the index into n_compact_partitions cell-aligned files.
         Returns the resulting file count, then runs the occupancy-skew
         alarm."""
-        n = self._compact_dir(
-            self.index_dir, ["cell"], dir_partition_by=["cell"],
+        n = self._rewrite(
+            self.index_dir, None, ["cell"], dir_partition_by=["cell"],
             schema=self.INDEX_SCHEMA,
         )
         if n:
@@ -808,27 +798,39 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
         by cell, so each dir's summed num_rows IS that cell's occupancy —
         the previous groupBy('cell').count() aggregate was one full Spark
         job per compaction (= per trigger in the max_files=1 oracle
-        drains) for a number the metadata already holds."""
+        drains) for a number the metadata already holds. Unreadable
+        footers are left out, with one warning naming how many."""
         import logging
 
         import pyarrow.parquet as pq
 
+        log = logging.getLogger(__name__)
+        live = self._live_dir(self.index_dir)
         occ: dict[str, int] = {}
-        for f in self._parquet_files(self.index_dir):
+        skipped = 0
+        for f in self._parquet_files(live):
             d = os.path.basename(os.path.dirname(f))
             if not d.startswith("cell="):
                 continue
             try:
                 rows = pq.ParquetFile(f).metadata.num_rows
-            except Exception:  # unreadable footer: skip, never crash a drain
+            except (OSError, ValueError):  # ArrowInvalid is a ValueError
+                skipped += 1
                 continue
             occ[d] = occ.get(d, 0) + rows
+        if skipped:
+            log.warning(
+                "semantic dedup index %s: skipped %d unreadable parquet "
+                "footer(s); the occupancy alarm is computed without them",
+                live,
+                skipped,
+            )
         if not occ:
             return
         mx = max(occ.values())
         mean = sum(occ.values()) / len(occ)
         if mean and mx / mean >= self.OCCUPANCY_ALARM:
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "semantic dedup index %s: cell occupancy skew %.1fx "
                 "(max %d / mean %.1f) >= %.1fx — the frozen centroids "
                 "no longer fit the stream's distribution; hot cells "
@@ -848,7 +850,6 @@ class IncrementalSemanticDeduper(_CompactingIndexBase):
         index. Within-batch dups keep the lowest vec_id."""
         from mysql_hbase_replicator_spark.operators.similarity import norm_sq
 
-        self._recover(self.index_dir)
         prepared = vecs.select(
             "vec_id", "embedding", norm_sq(F.col("embedding")).alias("nsq")
         )

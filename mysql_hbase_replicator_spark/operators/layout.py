@@ -8,18 +8,17 @@ engine owns layout itself, and two properties dominate scan cost at scale:
 - **partition pruning**: a filter on the partition column must eliminate
   whole directories before any I/O (`PartitionFilters` in the scan node,
   not `PushedFilters` — pruning happens at planning, pushdown at read).
-- **file sizing**: streaming/CDC sinks accrete many small files; reads then
-  pay per-file open/footer costs and lose large sequential scans. Periodic
-  compaction to ~target-sized files restores scan throughput.
+- **file sizing**: each partition directory holds a bounded number of
+  files, so reads do not pay per-file open/footer costs on a small-file
+  spray.
 
-Both operators are pure DataFrame writes — no driver-side data movement —
-and the compaction swap is crash-safe via the same retired/staging
-`os.replace` protocol as the streaming dedup index (dedup_stream.compact).
+Both are pure DataFrame writes — no driver-side data movement. Stores that
+are rewritten while readers may hold them (the keyed stores, the dedup
+indexes) compact through ``versioned.VersionedRoot`` instead.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 
@@ -141,8 +140,7 @@ def ensure_day_partitioned(
         # source regeneration must never leave a half-written dst visible to
         # an unlocked reader. With the rename swap the worst a concurrent
         # reader sees is a brief dir-not-found between the two atomic
-        # renames (the compact_small_files contract below), never partial
-        # data.
+        # renames, never partial data.
         staging, retired = dst + ".staging", dst + ".retired"
         shutil.rmtree(staging, ignore_errors=True)
         write_partitioned_sorted(out, staging, [date_col], sort_cols=list(sort_cols))
@@ -158,93 +156,3 @@ def ensure_day_partitioned(
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
 
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Rewrite a (non-partitioned) parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files and atomically swap it in.
-
-    Protocol (same crash-safety shape as dedup_stream.compact): write to
-    ``path.compacting``, retire the live dir to ``path.retired``, promote
-    staging with ``os.replace``, then delete the retired copy. On restart a
-    missing live dir with a surviving ``.retired`` is restored before
-    anything is deleted, so no crash point loses data.
-
-    Concurrency contract: SINGLE WRITER, NO CONCURRENT READER. Exclusivity
-    is a kernel ``flock`` on a persistent ``path.compacting.lock`` file: a
-    second concurrent call raises instead of racing the swap/reclaim steps,
-    and a lock whose holder CRASHED is released by the kernel automatically
-    — there is no stale-lock state and therefore no reclaim path. (The
-    previous PID-stamped unlink/recreate scheme had a TOCTOU: two
-    compactors could both observe a dead owner, and the slower reclaimer's
-    unlink deleted the faster one's freshly created lock, breaking the
-    single-writer guarantee.) The lock FILE persists across runs by design
-    — unlinking a flock'd path reintroduces the same race; the holder's
-    PID is written into it for diagnostics only. Readers are NOT protected:
-    between the two ``os.replace`` calls the live directory briefly does
-    not exist, so a concurrent scan can fail with file-not-found (never
-    read partial data — both swap steps are atomic renames). Run compaction
-    from the maintenance path that owns the store, as the streaming
-    pipeline does between batches.
-
-    Returns {"files_before": n, "files_after": m, "bytes": b}.
-    """
-    import fcntl
-
-    staging, retired = path + ".compacting", path + ".retired"
-    lock = staging + ".lock"
-    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    except OSError:
-        os.close(fd)
-        raise RuntimeError(
-            f"compaction already in progress for {path} ({lock} flock held by "
-            "a live process); compact_small_files is single-writer"
-        ) from None
-    try:
-        os.ftruncate(fd, 0)
-        os.write(fd, str(os.getpid()).encode())  # diagnostics only
-        return _compact_locked(spark, path, staging, retired, target_file_bytes)
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-def _compact_locked(
-    spark: SparkSession, path: str, staging: str, retired: str, target_file_bytes: int
-) -> dict:
-    # reclaim from a previous crash: never delete the only copy
-    if not os.path.isdir(path) and os.path.isdir(retired):
-        os.replace(retired, path)
-    for stale in (staging, retired):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-
-    def _data_files(p: str) -> list[str]:
-        return [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(p)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    before = _data_files(path)
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    # coalesce when shrinking (no shuffle); repartition only to grow
-    out = df.coalesce(n_out) if n_out <= len(before) else df.repartition(n_out)
-    out.write.mode("overwrite").parquet(staging)
-
-    os.replace(path, retired)
-    os.replace(staging, path)
-    shutil.rmtree(retired)
-    return {
-        "files_before": len(before),
-        "files_after": len(_data_files(path)),
-        "bytes": total,
-    }

@@ -26,8 +26,6 @@ but a production deployment should swap `ParquetKeyedStore` for Delta MERGE
 
 from __future__ import annotations
 
-import contextlib
-import json
 import os
 import shutil
 
@@ -35,6 +33,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from mysql_hbase_replicator_spark.operators.versioned import VersionedRoot
 
 BUCKET_COL = "_bucket"
 SCHEMA_FILE = "_schema.json"
@@ -87,41 +87,37 @@ class ParquetKeyedStore:
     # and its registry: the files are there, the registry is not yet, and the
     # next write records it.
 
-    def _schema_path(self, name: str) -> str:
-        return os.path.join(self.table_path(name), SCHEMA_FILE)
+    def _versions(self, name: str) -> VersionedRoot:
+        """The table's pointer doc (its _schema.json) and version dirs, with
+        the per-table writer flock beside the store at
+        ``.<table>.compact.lock``."""
+        return VersionedRoot(
+            self.table_path(name),
+            SCHEMA_FILE,
+            lock_path=os.path.join(self.base_dir, f".{name.replace(':', '_')}.compact.lock"),
+        )
 
-    def _registry(self, name: str) -> dict | None:
-        try:
-            with open(self._schema_path(name)) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            return None
-        return doc if isinstance(doc, dict) else None
+    def _doc(self, name: str) -> dict:
+        """The table's registry doc, ``{}`` when there is none (also for
+        store entries that are not tables)."""
+        return self._versions(name).doc()
 
     def _read_schema(self, name: str) -> T.StructType | None:
-        doc = self._registry(name)
+        doc = self._doc(name)
         try:
             return T.StructType.fromJson(doc["schema"]) if doc else None
         except (ValueError, KeyError):
             return None
-
-    def _read_pk_cols(self, name: str) -> list[str] | None:
-        doc = self._registry(name)
-        return doc.get("pk_cols") if doc else None
 
     def _write_schema(
         self, name: str, schema: T.StructType, pk_cols: list[str] | None = None
     ) -> None:
         doc = {"schema": schema.jsonValue()}
         if pk_cols is None:  # keep previously recorded keys
-            pk_cols = self._read_pk_cols(name)
+            pk_cols = self._doc(name).get("pk_cols")
         if pk_cols is not None:
             doc["pk_cols"] = list(pk_cols)
-        os.makedirs(self.table_path(name), exist_ok=True)
-        tmp = self._schema_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._schema_path(name))
+        self._versions(name).write(doc)
 
     def _read_current(self, spark: SparkSession, name: str) -> DataFrame:
         """The stored table WITH its bucket column, schema-registry fast path."""
@@ -260,22 +256,17 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
     partition-pruned.
 
     Crash + concurrency protocol: SNAPSHOT-POINTER over immutable versioned
-    directories, the same posture as the bucketed sibling (r12 verdict #1 —
-    the previous rename dance ``live → .pre-compact → rmtree`` invalidated
-    the file paths a LAZY reader resolved before the swap, so a held
-    DataFrame, or a reader in another process, crashed with
-    FileNotFoundException mid-scan the moment compaction ran). Base and
-    delta live in ``base_v{K}`` / ``delta_v{J}`` dirs and the registry
-    (_schema.json, atomic os.replace) points at the current pair.
+    directories (``versioned.VersionedRoot``; r12 verdict #1 — the previous
+    rename dance invalidated the file paths a LAZY reader resolved before
+    the swap). Base and delta live in ``base_v{K}`` / ``delta_v{J}`` dirs
+    and the registry (_schema.json) points at the current pair.
     Compaction writes ``base_v{K+1}`` from the reconstructed state, flips
-    the pointer in one replace (which also rotates the folded delta
-    version), then sweeps stale dirs KEEPING version N-1 of both kinds —
-    the reader-retirement window: a scan that resolved the previous pointer
-    finishes green, because every file it listed is still where it listed
-    it. Readers never take the flock at all. A crash anywhere leaves the
-    pointer on a consistent pair; never-flipped orphan dirs are overwritten
-    or swept by the next compaction. Reference semantics anchor: HBase
-    readers are never failed by a flush/compaction (HbaseApplier.scala:94).
+    the pointer (which also rotates the folded delta version), then sweeps
+    stale dirs KEEPING version N-1 of both kinds, so a scan that resolved
+    the previous pointer finishes green. Writers serialize on the
+    per-table flock; readers never take it. Reference semantics anchor:
+    HBase readers are never failed by a flush/compaction
+    (HbaseApplier.scala:94).
 
     Effectively-once is preserved: a replayed micro-batch appends a
     DUPLICATE delta at a higher seq, and last-image-wins collapse makes the
@@ -286,31 +277,11 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
     MULTI_ACTION_MERGE = False
     SEQ_COL = "_lsm_seq"
 
-    def __init__(
-        self,
-        base_dir: str,
-        n_buckets: int = 32,
-        compact_every: int = 64,
-        keep_versions: int = 1,
-    ):
+    def __init__(self, base_dir: str, n_buckets: int = 32, compact_every: int = 64):
         super().__init__(base_dir, n_buckets=n_buckets)
         self.compact_every = compact_every
-        # reader-retirement depth (r13 verdict #3): how many RETIRED
-        # versions of base/delta stay on disk behind the current pointer.
-        # The default (1) is the documented one-flip window — a lazy
-        # DataFrame that resolved the previous pointer finishes its scan;
-        # readers held across >= keep_versions+1 compactions can hit
-        # FileNotFoundException (the standard retention trade — Delta's
-        # VACUUM horizon). Raise it when consumers hold frames across
-        # multiple flips (e.g. a slow downstream join over a hot store).
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1 (got {keep_versions})")
-        self.keep_versions = keep_versions
 
     # --- versioned-pointer registry ------------------------------------------
-    def _doc(self, name: str) -> dict:
-        return self._registry(name) or {}
-
     def _pointer_doc(self, name: str) -> dict:
         """The table's pointer doc, ``{}`` for a table not written yet.
         Every write of this store records ``delta_version``; a non-empty doc
@@ -327,18 +298,8 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
             )
         return doc
 
-    def _update_registry(self, name: str, **fields) -> dict:
-        doc = self._doc(name)
-        doc.update(fields)
-        os.makedirs(self.table_path(name), exist_ok=True)
-        tmp = self._schema_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._schema_path(name))
-        return doc
-
     def _ver_path(self, name: str, kind: str, ver: int) -> str:
-        return os.path.join(self.table_path(name), f"{kind}_v{ver}")
+        return self._versions(name).path(kind, ver)
 
     # --- delta bookkeeping --------------------------------------------------
     def _delta_path(self, name: str, doc: dict | None = None) -> str:
@@ -361,69 +322,13 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
     def _has_delta_files(self, name: str, doc: dict | None = None) -> bool:
         return self._dir_has_parquet(self._delta_path(name, doc))
 
-    def _lock_path(self, name: str) -> str:
-        return os.path.join(self.base_dir, f".{name.replace(':', '_')}.compact.lock")
-
-    @contextlib.contextmanager
-    def _table_flock(self, name: str):
-        """Exclusive per-table flock — the single serialization point for
-        WRITERS (delta appends, compaction, full reloads). Readers never
-        take it: the pointer flip is one atomic os.replace and version dirs
-        are immutable, so a read is consistent from whichever pointer it
-        loads. NOT re-entrant: flock locks conflict across file descriptors
-        even within one process, so nothing inside a ``with
-        _table_flock(...)`` block may call another method that takes it
-        (compact from inside a locked region deadlocks against ourselves)."""
-        import fcntl
-
-        os.makedirs(self.base_dir, exist_ok=True)
-        fd = os.open(self._lock_path(name), os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
-    def _stale_version_dirs(self, name: str) -> list[tuple[str, int, str]]:
-        """Version dirs the pointer no longer references AND that are
-        outside the ``keep_versions`` reader-retirement window — the
-        ``keep_versions`` immediately-previous versions of base and delta
-        are RETAINED so a reader that resolved an old pointer finishes its
-        scan; only older ones, plus never-referenced crash orphans (e.g. a
-        base_v99 left by a crashed compaction that never flipped), qualify.
-        Returns (kind, ver, path) for the subclass-specific drop (the
-        bucketed sibling also drops its catalog entries)."""
-        doc = self._doc(name)
-        keep: set[tuple[str, int]] = set()
-        for kind, cur in (
-            ("base", doc.get("base_version")),
-            ("delta", doc.get("delta_version", 0)),
-        ):
-            if cur is None:
-                continue
-            for back in range(self.keep_versions + 1):
-                if int(cur) - back >= 0:
-                    keep.add((kind, int(cur) - back))
-        try:
-            entries = os.listdir(self.table_path(name))
-        except OSError:
-            return []
-        stale = []
-        for e in entries:
-            for kind in ("base", "delta"):
-                pfx = f"{kind}_v"
-                if e.startswith(pfx) and e[len(pfx):].isdigit():
-                    ver = int(e[len(pfx):])
-                    if (kind, ver) not in keep:
-                        stale.append((kind, ver, os.path.join(self.table_path(name), e)))
-        return stale
-
-    def _sweep_stale_versions(self, spark: SparkSession, name: str) -> None:
-        """Best-effort drop of retired version dirs: a failure leaves
-        garbage for the next sweep, never an inconsistent pointer."""
-        for _kind, _ver, path in self._stale_version_dirs(name):
-            shutil.rmtree(path, ignore_errors=True)
+    def _sweep(self, spark: SparkSession, name: str, doc: dict, on_drop=None) -> None:
+        """Drop the version dirs outside the one-flip retirement window of
+        the pointer ``doc`` (see VersionedRoot.sweep)."""
+        self._versions(name).sweep(
+            {"base": doc.get("base_version"), "delta": int(doc.get("delta_version", 0))},
+            on_drop,
+        )
 
     # --- write path ---------------------------------------------------------
     def overwrite(self, spark: SparkSession, name: str, df: DataFrame, pk_cols: list[str]) -> None:
@@ -433,23 +338,24 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         sibling's posture; the old layout got this implicitly because the
         static overwrite wiped the whole table dir). Files linger one flip
         as the reader-retirement window, then the sweep drops them."""
-        with self._table_flock(name):
+        versions = self._versions(name)
+        with versions.lock():
             doc = self._pointer_doc(name)
             prev_base = doc.get("base_version")
             new_ver = (int(prev_base) if prev_base is not None else -1) + 1
             staged = df.withColumn(BUCKET_COL, self._bucket(pk_cols)).repartition(BUCKET_COL)
             staged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-                self._ver_path(name, "base", new_ver)
+                versions.path("base", new_ver)
             )
             rotate = 1 if self._has_delta_files(name, doc) else 0
-            self._update_registry(
-                name,
+            doc = versions.update(
+                doc,
                 schema=staged.schema.jsonValue(),
                 pk_cols=list(pk_cols),
                 base_version=new_ver,
                 delta_version=int(doc.get("delta_version", 0)) + rotate,
             )
-            self._sweep_stale_versions(spark, name)
+            self._sweep(spark, name, doc)
 
     def merge_actions(
         self,
@@ -468,7 +374,8 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         # fresh pointer flip with a stale base/delta version. The flock is
         # not re-entrant, so the compaction trigger is evaluated outside the
         # lock (compact() takes the same flock and re-checks under it).
-        with self._table_flock(name):
+        versions = self._versions(name)
+        with versions.lock():
             doc = self._pointer_doc(name)
             seqs = self._delta_seqs(name, doc)
             n = (seqs[-1] + 1) if seqs else 0
@@ -477,8 +384,8 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
             # leaves only an uncommitted _temporary dir (invisible to
             # readers) and the replayed batch lands at the next seq
             actions.write.mode("overwrite").parquet(out)
-            self._update_registry(
-                name,
+            versions.update(
+                doc,
                 schema=self._widened_schema(actions, doc).jsonValue(),
                 pk_cols=list(pk_cols),
                 base_version=doc.get("base_version"),
@@ -614,7 +521,8 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
         compaction ran. Crash safety: a base_v{K+1} written but never
         flipped is overwritten by the retry (same version number recomputed
         from the unmoved pointer) or swept as an orphan."""
-        with self._table_flock(name):
+        versions = self._versions(name)
+        with versions.lock():
             doc = self._pointer_doc(name)
             if not self._has_delta_files(name, doc):
                 return False
@@ -632,7 +540,7 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
                 staged_df.repartition(self.n_buckets, BUCKET_COL)
                 .write.partitionBy(BUCKET_COL)
                 .mode("overwrite")
-                .parquet(self._ver_path(name, "base", new_ver))
+                .parquet(versions.path("base", new_ver))
             )
             # Registry schema comes from the staged FRAME, never a read-back
             # of the new base dir: when the reconstructed state is EMPTY (a
@@ -642,14 +550,14 @@ class LogStructuredKeyedStore(ParquetKeyedStore):
             # merge_actions every compact_every deltas, so that crash turned
             # a delete-all table into a stuck, forever-retrying micro-batch
             # (r11 verdict).
-            self._update_registry(
-                name,
+            doc = versions.update(
+                doc,
                 schema=staged_df.schema.jsonValue(),
                 pk_cols=list(pk_cols),
                 base_version=new_ver,
                 delta_version=int(doc.get("delta_version", 0)) + 1,
             )
-            self._sweep_stale_versions(spark, name)
+            self._sweep(spark, name, doc)
             return True
 
 
@@ -672,16 +580,12 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
     the ENTIRE base on pk — here neither side moves (plan-gated in
     tests/test_lsm_store.py).
 
-    Crash protocol: SNAPSHOT-POINTER, like the parent since r13 (the
-    bucketed store pioneered it; the parent adopted it when the rename
-    dance proved reader-hostile). Base and delta
-    live in versioned directories (``base_v{K}``/``delta_v{J}``) and the
-    registry (_schema.json, written via atomic os.replace) points at the
-    current versions — the mini Iceberg/Delta trade. Compaction writes
-    base_v{K+1} from the current state, flips the pointer in one atomic
-    replace (which also retires the folded delta version), then best-
-    effort-drops the stale dirs; a crash anywhere leaves the pointer on a
-    consistent pair and the orphan dirs are swept by the next compaction.
+    Crash protocol: the parent's snapshot pointer (the mini Iceberg/Delta
+    trade): ``base_v{K}``/``delta_v{J}`` dirs behind the registry, one
+    pointer flip per compaction (which also retires the folded delta
+    version), and a sweep that keeps version N-1 of both kinds for readers
+    that resolved the previous pointer; the sweep also drops the swept
+    versions' catalog entries.
 
     Delta appends carry a monotone ``_lsm_seq`` column from the registry's
     ``next_seq`` counter (bumped AFTER the append commits). A crash
@@ -689,13 +593,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
     harmless: the replay appends byte-identical rows, and last-wins
     collapse over identical rows is identical. Like the parent (whose seq
     comes from a directory listing), concurrent WRITERS on one table are
-    serialized by the streaming engine, not this class. Concurrent READERS
-    get a one-version retirement window: the sweep keeps version N-1 of
-    both base and delta alongside the live N, so a reader that resolved
-    the previous pointer finishes its scan; only N-2 and older (plus
-    never-referenced crash orphans) are dropped — the same
-    snapshot-expiry trade Iceberg/Delta make, at the cost of one extra
-    base copy between compactions.
+    serialized by the streaming engine, not this class.
 
     Catalog notes: table names are keyed by (store dir, table, version) so
     stores never collide; a FRESH session re-registers the current
@@ -708,19 +606,8 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
     allowMissingColumns as everywhere else in the engine.
     """
 
-    def __init__(
-        self,
-        base_dir: str,
-        n_buckets: int = 32,
-        compact_every: int = 64,
-        keep_versions: int = 1,
-    ):
-        super().__init__(
-            base_dir,
-            n_buckets=n_buckets,
-            compact_every=compact_every,
-            keep_versions=keep_versions,
-        )
+    def __init__(self, base_dir: str, n_buckets: int = 32, compact_every: int = 64):
+        super().__init__(base_dir, n_buckets=n_buckets, compact_every=compact_every)
         import hashlib
 
         self._digest = hashlib.md5(
@@ -728,7 +615,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         ).hexdigest()[:8]
 
     # --- catalog plumbing ----------------------------------------------------
-    # (_doc/_update_registry/_ver_path are the parent's pointer machinery)
+    # (_doc/_versions/_ver_path are the parent's pointer machinery)
     def _safe(self, name: str) -> str:
         return "".join(c if c.isalnum() else "_" for c in name)
 
@@ -810,16 +697,16 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         schema_json: dict,
         pk_cols: list[str],
         new_base_ver: int,
-    ) -> None:
+    ) -> dict:
         """The ONE atomic pointer flip shared by overwrite() and compact():
         new base in; the current delta version retired (rotated) IF it has
         files, so its stale rows never replay over the new base; next_seq
         carried, folded_seq caught up. A delta-less flip does not burn a
         delta version (the sequence stays gap-free for the crash-protocol
-        reader)."""
+        reader). Returns the new doc."""
         rotate = 1 if doc.get("delta_cols") is not None else 0
-        self._update_registry(
-            name,
+        return self._versions(name).update(
+            doc,
             schema=schema_json,
             pk_cols=list(pk_cols),
             bucketed=True,
@@ -846,7 +733,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         compact(). Holds the same per-table flock as compact(): a full
         reload racing a streaming-triggered compaction would otherwise
         interleave two read-modify-write flips over one version dir."""
-        with self._table_flock(name):
+        with self._versions(name).lock():
             doc = self._pointer_doc(name)
             prev_base = doc.get("base_version")
             new_ver = (int(prev_base) if prev_base is not None else -1) + 1
@@ -854,8 +741,8 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
                 df, name, "base", new_ver, pk_cols, "overwrite",
                 n_buckets=self._bucket_count(name, doc),
             )
-            self._flip_pointer(name, doc, df.schema.jsonValue(), pk_cols, new_ver)
-            self._sweep_stale_versions(spark, name)
+            doc = self._flip_pointer(name, doc, df.schema.jsonValue(), pk_cols, new_ver)
+            self._sweep(spark, name, doc)
 
     def merge_actions(
         self,
@@ -867,7 +754,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
     ) -> None:
         """Delta append. Runs UNDER the per-table flock (ADVICE r11): the
         append is a read-modify-write of the registry (doc at entry,
-        _update_registry at the end), so without the lock an append racing a
+        the pointer update at the end), so without the lock an append racing a
         locked overwrite()/compact() pointer flip — the exact cross-process
         scenario the overwrite lock exists for — could clobber the fresh
         pointer with its stale base_version/delta_cols/delta_version. The
@@ -878,7 +765,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
         actions = final.select(*sink_cols, KIND_COL)
         delta_cols_now = [*sink_cols, KIND_COL, self.SEQ_COL]
         while True:
-            with self._table_flock(name):
+            with self._versions(name).lock():
                 doc = self._pointer_doc(name)
                 prev_delta_cols = doc.get("delta_cols")
                 if prev_delta_cols is None or prev_delta_cols == delta_cols_now:
@@ -927,8 +814,8 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
             staged, name, "delta", delta_ver, pk_cols, "append", n_buckets=n_bkts
         )
         folded_seq = int(doc.get("folded_seq", 0))
-        self._update_registry(
-            name,
+        self._versions(name).update(
+            doc,
             schema=self._widened_schema(actions, doc).jsonValue(),
             pk_cols=list(pk_cols),
             bucketed=True,
@@ -1021,7 +908,7 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
 
     # --- compaction ----------------------------------------------------------
     def compact(self, spark: SparkSession, name: str) -> bool:
-        with self._table_flock(name):
+        with self._versions(name).lock():
             doc = self._pointer_doc(name)
             if doc.get("delta_cols") is None:
                 return False
@@ -1035,17 +922,19 @@ class BucketedLogStructuredKeyedStore(LogStructuredKeyedStore):
             schema = spark.table(self._cat_name(name, "base", new_ver)).schema
             # ONE atomic pointer flip: new base in, folded delta version
             # retired, next delta version armed empty
-            self._flip_pointer(name, doc, schema.jsonValue(), pk_cols, new_ver)
-            self._sweep_stale_versions(spark, name)
+            doc = self._flip_pointer(name, doc, schema.jsonValue(), pk_cols, new_ver)
+            self._sweep(spark, name, doc)
             return True
 
-    def _sweep_stale_versions(self, spark: SparkSession, name: str) -> None:
-        """The parent's N-1 retirement sweep, plus dropping the retired
-        versions' CATALOG entries before their dirs (see
-        _stale_version_dirs for the keep policy)."""
-        for kind, ver, path in self._stale_version_dirs(name):
-            spark.sql("DROP TABLE IF EXISTS " + self._cat_name(name, kind, ver))
-            shutil.rmtree(path, ignore_errors=True)
+    def _sweep(self, spark: SparkSession, name: str, doc: dict, on_drop=None) -> None:
+        """The parent's sweep, dropping each swept version's CATALOG entry
+        before its dir."""
+        super()._sweep(
+            spark,
+            name,
+            doc,
+            lambda kind, ver: spark.sql("DROP TABLE IF EXISTS " + self._cat_name(name, kind, ver)),
+        )
 
 
 # --- selectable store kinds --------------------------------------------------
@@ -1067,7 +956,6 @@ def make_store(
     base_dir: str,
     n_buckets: int = 32,
     compact_every: int = 64,
-    keep_versions: int = 1,
 ) -> ParquetKeyedStore:
     """Construct a keyed store by kind name (see STORE_KINDS)."""
     try:
@@ -1078,9 +966,4 @@ def make_store(
         ) from None
     if cls is ParquetKeyedStore:
         return cls(base_dir, n_buckets=n_buckets)
-    return cls(
-        base_dir,
-        n_buckets=n_buckets,
-        compact_every=compact_every,
-        keep_versions=keep_versions,
-    )
+    return cls(base_dir, n_buckets=n_buckets, compact_every=compact_every)

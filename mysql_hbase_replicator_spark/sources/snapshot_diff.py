@@ -53,13 +53,13 @@ diffs new-vs-new — empty diff. Either way the store converges
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mysql_hbase_replicator_spark.operators.versioned import VersionedRoot
 
 SNAP_VER_COL = "_snap_ver"
 
@@ -241,33 +241,19 @@ def _or_all(conds) -> F.Column:
 
 
 class PrevSnapshotStore:
-    """The pipeline's memory of the last APPLIED snapshot — versioned
-    parquet dirs under ``<checkpoint>/snapshots`` with an atomically
-    os.replace'd JSON marker, the same snapshot-pointer discipline as the
-    LSM stores (crash anywhere leaves the marker on a consistent version;
-    never-flipped dirs are overwritten by the replay or swept)."""
+    """The pipeline's memory of the last APPLIED snapshot — ``prev_v{K}``
+    parquet dirs under ``<checkpoint>/snapshots`` behind a JSON marker, on
+    the same versioned-store primitive as the LSM stores (crash anywhere
+    leaves the marker on a consistent version; never-flipped dirs are
+    overwritten by the replay or swept). One retired version is kept, so a
+    replayed batch can still re-read its diff inputs."""
 
-    MARKER = "_current.json"
-
-    def __init__(self, root: str, keep_versions: int = 1):
+    def __init__(self, root: str):
         self.root = root
-        # retired prev-snapshot versions retained behind the marker (r13
-        # verdict #3 — same knob as the LSM stores' reader-retirement
-        # window); 1 = the replayed batch can still re-read its diff inputs
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1 (got {keep_versions})")
-        self.keep_versions = keep_versions
-
-    def _marker_path(self) -> str:
-        return os.path.join(self.root, self.MARKER)
+        self._versions = VersionedRoot(root)
 
     def _marker(self) -> dict:
-        try:
-            with open(self._marker_path()) as f:
-                doc = json.load(f)
-            return doc if isinstance(doc, dict) else {}
-        except (OSError, ValueError):
-            return {}
+        return self._versions.doc()
 
     def current_version(self) -> int | None:
         try:
@@ -337,14 +323,10 @@ class PrevSnapshotStore:
         unhealed = self.unhealed_map()
         for k, v in names.items():
             unhealed[k] = max(int(v), unhealed.get(k, 0))
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._marker_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({**marker, "unhealed": unhealed}, f)
-        os.replace(tmp, self._marker_path())
+        self._versions.update(marker, unhealed=unhealed)
 
     def _ver_path(self, ver: int) -> str:
-        return os.path.join(self.root, f"prev_v{ver}")
+        return self._versions.path("prev", ver)
 
     def read_current(
         self, spark: SparkSession, row_struct: T.StructType
@@ -379,11 +361,7 @@ class PrevSnapshotStore:
         files = self.files_map()
         for k, v in file_vers.items():
             files[k] = max(int(v), files.get(k, 0))
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._marker_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({**marker, "files": files}, f)
-        os.replace(tmp, self._marker_path())
+        self._versions.update(marker, files=files)
 
     def flip(
         self,
@@ -397,7 +375,6 @@ class PrevSnapshotStore:
         current landing listing, when the caller has one) prunes map entries
         for files the producer has deleted, bounding the marker's size by
         the live landing."""
-        os.makedirs(self.root, exist_ok=True)
         files = self.files_map()
         if file_vers:
             for k, v in file_vers.items():
@@ -415,15 +392,5 @@ class PrevSnapshotStore:
         doc = {"version": version, "snap_ver": snap_ver, "files": files}
         if unhealed:
             doc["unhealed"] = unhealed
-        tmp = self._marker_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._marker_path())
-        # sweep: keep current and the keep_versions most recent retired
-        # dirs (default 1: the replayed batch may still re-read its diff
-        # inputs); older versions are garbage
-        for e in os.listdir(self.root):
-            if e.startswith("prev_v") and e[len("prev_v"):].isdigit():
-                v = int(e[len("prev_v"):])
-                if v < version - self.keep_versions:
-                    shutil.rmtree(os.path.join(self.root, e), ignore_errors=True)
+        self._versions.write(doc)
+        self._versions.sweep({"prev": version})

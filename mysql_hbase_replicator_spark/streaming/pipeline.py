@@ -127,11 +127,6 @@ class CdcStreamPipeline:
     # per-table fixed cost (~1.2 s of plan/stage/kernel machinery) then
     # overlaps instead of summing.
     snapshot_parallel_tables: int = 1
-    # snapshot_diff only: retired prev-snapshot versions retained behind
-    # the marker (PrevSnapshotStore's keep_versions — the snapshot twin of
-    # store_keep_versions; raise both together when consumers hold frames
-    # across several flips)
-    snapshot_keep_versions: int = 1
     # snapshot_diff only: landing-file format — "json" (debug/test default)
     # or "parquet" (the production shape a jdbc_snapshot poller writes)
     snapshot_format: str = "json"
@@ -146,10 +141,6 @@ class CdcStreamPipeline:
     store_dir: str | None = None
     store_n_buckets: int = 32
     store_compact_every: int = 64
-    # reader-retirement depth of the LSM pointer protocol (r13 verdict #3):
-    # raise when downstream consumers hold DataFrames across several
-    # compaction flips of a hot table
-    store_keep_versions: int = 1
 
     results: list[CdcBatchResult] = field(default_factory=list)
     # O1 latency rings (HbaseApplier.scala:45-52): last-10 wall-time samples
@@ -185,7 +176,6 @@ class CdcStreamPipeline:
                 self.store_dir,
                 n_buckets=self.store_n_buckets,
                 compact_every=self.store_compact_every,
-                keep_versions=self.store_keep_versions,
             )
 
     def _check_schemas(self) -> None:
@@ -396,10 +386,7 @@ class CdcStreamPipeline:
             PrevSnapshotStore,
         )
 
-        return PrevSnapshotStore(
-            self._snapshot_store_root(full_name),
-            keep_versions=self.snapshot_keep_versions,
-        )
+        return PrevSnapshotStore(self._snapshot_store_root(full_name))
 
     def _snapshot_landing_dir(self, full_name: str) -> str:
         return (

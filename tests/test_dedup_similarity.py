@@ -4,6 +4,7 @@ vs exact Jaccard, SimHash properties, LSH-ANN recall vs brute force."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -412,12 +413,23 @@ def test_incremental_dedup_rejects_are_distributed(spark, tmp_path):
     assert sorted(r.doc_id for r in admitted.collect()) == [1]
 
 
-def test_incremental_dedup_crash_recovery(spark, tmp_path):
-    """Crash between retire and promote leaves only '.retired' — the next
-    call must restore it, not rmtree the sole surviving index copy."""
-    import os
-    import shutil
+def plant_orphan_version(dd, root: str) -> str:
+    """Inject the crash state of a rewrite that died before its pointer
+    flip: a never-flipped ``index_v<K+1>`` holding a junk parquet file,
+    with the pointer left on ``index_v<K>``. Returns the orphan's path."""
+    live = dd._live_dir(root)
+    orphan = os.path.join(root, f"{dd.KIND}_v{int(live.rsplit('_v', 1)[1]) + 1}")
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "junk.parquet"), "w") as f:
+        f.write("not parquet")
+    return orphan
 
+
+def test_incremental_dedup_crash_recovery(spark, tmp_path):
+    """A rewrite that crashed before its pointer flip leaves a never-flipped
+    version (with a junk file) beside the live one: the next batch screens
+    against the live version with unchanged verdicts, and the next rewrite
+    overwrites the orphan."""
     from mysql_hbase_replicator_spark.operators.dedup_stream import IncrementalDeduper
 
     idx = str(tmp_path / "idx")
@@ -429,24 +441,74 @@ def test_incremental_dedup_crash_recovery(spark, tmp_path):
     b1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
     assert [r.doc_id for r in dd.process_batch(b1).collect()] == [1]
 
-    # simulate the torn swap: index retired, promotion never happened, and a
-    # half-written staging dir is lying around
-    os.replace(idx, idx + ".retired")
-    os.makedirs(idx + ".compacting")
-    with open(os.path.join(idx + ".compacting", "junk.parquet"), "w") as f:
-        f.write("not parquet")
+    live = dd._live_dir(idx)
+    orphan = plant_orphan_version(dd, idx)
 
     b2 = spark.createDataFrame([(2, base)], "doc_id long, text string")
-    assert dd.process_batch(b2).collect() == []  # index restored → dup caught
-    assert not os.path.isdir(idx + ".retired")
-    assert not os.path.isdir(idx + ".compacting")
+    assert dd.process_batch(b2).collect() == []  # live index screened → dup caught
+    assert dd._live_dir(idx) == live
 
-    # completed-promotion crash (live dir AND stale retired copy): retired
-    # copy is dropped, live index survives
-    shutil.copytree(idx, idx + ".retired")
+    # the next rewrite lands on the orphan's version number and overwrites it
+    dd.compact()
+    assert dd._live_dir(idx) == orphan
+    assert not os.path.exists(os.path.join(orphan, "junk.parquet"))
     b3 = spark.createDataFrame([(3, base)], "doc_id long, text string")
     assert dd.process_batch(b3).collect() == []
-    assert not os.path.isdir(idx + ".retired")
+
+
+@pytest.mark.parametrize(
+    "kind", ["IncrementalDeduper", "IncrementalExactDeduper", "IncrementalSemanticDeduper"]
+)
+def test_incremental_index_reader_survives_compaction(spark, tmp_path, kind):
+    """A lazy DataFrame over the live index version, held across compact(),
+    still scans green: the rewrite lands in the next version and the
+    previous one survives the flip. A fresh read after the flip sees the
+    same rows."""
+    from mysql_hbase_replicator_spark.operators import dedup_stream
+
+    idx = str(tmp_path / "idx")
+    if kind == "IncrementalSemanticDeduper":
+        dd = dedup_stream.IncrementalSemanticDeduper(spark, idx, threshold=0.99, n_cells=2)
+        batches = [
+            _vec_df(spark, [(0, (1, 0, 0, 0)), (1, (0, 1, 0, 0))]),
+            _vec_df(spark, [(2, (0, 0, 1, 0))]),
+            _vec_df(spark, [(3, (0, 0, 0, 1))]),
+        ]
+    else:
+        dd = getattr(dedup_stream, kind)(spark, idx)
+        batches = [
+            spark.createDataFrame(
+                [(b * 10 + i, f"batch {b} document {i} " + " ".join(f"w{b}{i}{j}" for j in range(20)))
+                 for i in range(3)],
+                "doc_id long, text string",
+            )
+            for b in range(3)
+        ]
+    for batch in batches:
+        dd.process_batch(batch)
+
+    def read_live():
+        return spark.read.schema(dd.INDEX_SCHEMA).parquet(dd._live_dir(idx))
+
+    held = read_live()
+    want = sorted(tuple(r) for r in held.collect())
+    assert dd.compact() > 0
+    assert held.count() == len(want)
+    assert sorted(tuple(r) for r in read_live().collect()) == want
+
+
+def test_incremental_dedup_refuses_unversioned_index(spark, tmp_path):
+    """An index directory holding parquet files but no pointer doc (the
+    unversioned layout) is refused by name: read as empty, it would
+    silently re-admit every document."""
+    from mysql_hbase_replicator_spark.operators.dedup_stream import IncrementalDeduper
+
+    idx = str(tmp_path / "idx")
+    spark.createDataFrame([(1, 0, 7)], IncrementalDeduper.INDEX_SCHEMA).write.parquet(idx)
+    dd = IncrementalDeduper(spark, idx)
+    batch = spark.createDataFrame([(2, "some text here")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=re.escape(idx)):
+        dd.process_batch(batch)
 
 
 def test_incremental_dedup_jaccard_rerank(spark, tmp_path):
@@ -1134,12 +1196,40 @@ def test_incremental_semantic_occupancy_alarm(spark, tmp_path, caplog):
     assert any("occupancy skew" in r.message for r in caplog.records)
 
 
+def test_incremental_semantic_occupancy_alarm_reports_skipped_footers(
+    spark, tmp_path, caplog
+):
+    """An unreadable footer in a cell= dir never crashes the alarm, and is
+    not skipped silently either: one warning names how many footers were
+    skipped and the index version dir they sit in."""
+    import logging as _logging
+
+    from mysql_hbase_replicator_spark.operators.dedup_stream import (
+        IncrementalSemanticDeduper,
+    )
+
+    dd = IncrementalSemanticDeduper(
+        spark, str(tmp_path / "semidx"), threshold=0.9, n_cells=2
+    )
+    dd.process_batch(_vec_df(spark, [(0, (1, 0, 0, 0)), (1, (0, 1, 0, 0))]))
+    live = dd._live_dir(dd.index_dir)
+    cell = next(d for d in os.listdir(live) if d.startswith("cell="))
+    with open(os.path.join(live, cell, "junk.parquet"), "w") as f:
+        f.write("not parquet")
+    with caplog.at_level(
+        _logging.WARNING,
+        logger="mysql_hbase_replicator_spark.operators.dedup_stream",
+    ):
+        dd._occupancy_alarm()
+    skipped = [r.getMessage() for r in caplog.records if "unreadable" in r.getMessage()]
+    assert len(skipped) == 1, skipped
+    assert "skipped 1 unreadable" in skipped[0] and live in skipped[0]
+
+
 def test_incremental_semantic_dedup_compaction_and_recovery(spark, tmp_path):
     """Compaction (forced via max_files=1) must not change screening, and
-    a crash between retire and promote leaves a recoverable index."""
-    import os as _os
-    import shutil as _shutil
-
+    a rewrite that crashed before its pointer flip leaves the live version
+    screening unchanged; the next rewrite overwrites the orphan."""
     from mysql_hbase_replicator_spark.operators.dedup_stream import (
         IncrementalSemanticDeduper,
     )
@@ -1151,9 +1241,13 @@ def test_incremental_semantic_dedup_compaction_and_recovery(spark, tmp_path):
     dd.process_batch(_vec_df(spark, [(5, (0, 0, 1, 0))]))  # triggers compact
     # post-compaction screening: dup of an OLD vector still rejected
     assert dd.process_batch(_vec_df(spark, [(9, (3, 0, 0, 0))])).count() == 0
-    # crash window: retired exists, live gone -> recovered on next batch
-    _os.replace(idx, idx + ".retired")
+    # crash window: a never-flipped next version holds junk; the batch
+    # screens against the live version, and its rewrite (max_files=1)
+    # overwrites the orphan
+    orphan = plant_orphan_version(dd, idx)
     assert dd.process_batch(_vec_df(spark, [(12, (0, 2, 0, 0))])).count() == 0
+    assert dd._live_dir(idx) == orphan
+    assert not os.path.exists(os.path.join(orphan, "junk.parquet"))
     # and a genuinely novel direction is still admitted afterwards
     got = dd.process_batch(_vec_df(spark, [(13, (0, 0, 0, 1))]))
     assert [r.vec_id for r in got.collect()] == [13]
@@ -1266,7 +1360,7 @@ def test_hive_index_floor_does_not_retrigger_compaction(spark, tmp_path):
     assert dd.process_batch(b0).count() == 50
     # far more files than max_files=1, but all at the per-dir floor
     assert len(dd._data_files()) > dd.max_files
-    assert not dd._needs_compaction([dd.index_dir])
+    assert not dd._predicted_compaction(dd._live_dir(dd.index_dir), None)
     b1 = spark.createDataFrame(
         [(100 + i, f"second wave document {i} again fully distinct text")
          for i in range(50)],
@@ -1275,7 +1369,7 @@ def test_hive_index_floor_does_not_retrigger_compaction(spark, tmp_path):
     assert dd.process_batch(b1).count() == 50  # append + triggered compact
     counts = Counter(os.path.dirname(f) for f in dd._data_files())
     assert max(counts.values()) == 1, counts  # back at the floor
-    assert not dd._needs_compaction([dd.index_dir])
+    assert not dd._predicted_compaction(dd._live_dir(dd.index_dir), None)
 
 
 def test_semantic_centroid_cache_is_driver_resident(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Layout-management gates: partition pruning must eliminate directories at
-planning time, and compaction must shrink file counts without changing data
-— the write-side properties that keep 100 TB scans cheap."""
+planning time, and partitioned writes must bound the files per directory —
+the write-side properties that keep 100 TB scans cheap."""
 
 from __future__ import annotations
 
@@ -8,10 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from mysql_hbase_replicator_spark.operators.layout import (
-    compact_small_files,
-    write_partitioned_sorted,
-)
+from mysql_hbase_replicator_spark.operators.layout import write_partitioned_sorted
 
 SF = "/root/testdata/sf0.001"
 
@@ -70,72 +67,3 @@ def test_partitioned_write_respects_files_per_partition(spark, tmp_path):
     assert counts and max(counts) <= 3 and max(counts) > 1
 
 
-def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
-    out = str(tmp_path / "frag")
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    orders.repartition(16).write.parquet(out)
-
-    before = spark.read.parquet(out)
-    n_rows = before.count()
-    # XOR fold: order-insensitive and overflow-free under ANSI mode
-    checksum = before.agg(F.bit_xor(F.xxhash64(*before.columns))).collect()[0][0]
-
-    stats = compact_small_files(spark, out, target_file_bytes=1 << 30)
-    assert stats["files_before"] == 16
-    assert stats["files_after"] == 1
-
-    after = spark.read.parquet(out)
-    assert after.count() == n_rows
-    assert after.agg(F.bit_xor(F.xxhash64(*after.columns))).collect()[0][0] == checksum
-    # no leftover staging/retired dirs
-    assert not os.path.isdir(out + ".compacting")
-    assert not os.path.isdir(out + ".retired")
-
-
-def test_compaction_lock_blocks_live_second_writer(spark, tmp_path):
-    """A flock held by a LIVE holder makes a second compactor raise instead
-    of racing the swap; a lock file left by a DEAD process carries no flock
-    (the kernel released it), so compaction proceeds — no reclaim step, no
-    TOCTOU between competing reclaimers."""
-    import fcntl
-
-    import pytest
-
-    out = str(tmp_path / "locked")
-    spark.range(10).write.parquet(out)
-    lock = out + ".compacting.lock"
-
-    # live holder: flock via an independent fd (flock is per open-file-
-    # description, so this conflicts exactly like another process would)
-    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
-    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    try:
-        with pytest.raises(RuntimeError, match="single-writer"):
-            compact_small_files(spark, out, target_file_bytes=1 << 30)
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-    # crashed holder: the file persists but its flock died with the process
-    # — the next compactor locks it directly
-    with open(lock, "w") as f:
-        f.write("999999999")  # stale diagnostics PID from the "crash"
-    stats = compact_small_files(spark, out, target_file_bytes=1 << 30)
-    assert stats["files_after"] >= 1
-    # the lock FILE survives by design (unlinking a flock path is the race);
-    # its diagnostics PID was rewritten by the successful run
-    assert open(lock).read() == str(os.getpid())
-    assert spark.read.parquet(out).count() == 10
-
-
-def test_compaction_recovers_from_crashed_swap(spark, tmp_path):
-    """If a crash left only the .retired copy, compaction restores it
-    instead of deleting the sole remaining data."""
-    out = str(tmp_path / "crashed")
-    spark.range(100).write.parquet(out)
-    os.replace(out, out + ".retired")  # simulate crash between the replaces
-
-    stats = compact_small_files(spark, out, target_file_bytes=1 << 30)
-    assert spark.read.parquet(out).count() == 100
-    assert stats["files_after"] >= 1
-    assert not os.path.isdir(out + ".retired")

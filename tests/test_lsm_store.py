@@ -485,7 +485,7 @@ def test_lsm_read_is_lock_free(spark, tmp_path, student_struct, student_mapping)
             results["got"] = e
 
     # an independent fd, exactly what a second process would hold
-    fd = os.open(lsm._lock_path(TABLE), os.O_CREAT | os.O_RDWR)
+    fd = os.open(lsm._versions(TABLE).lock_path, os.O_CREAT | os.O_RDWR)
     t = threading.Thread(target=reader, daemon=True)
     try:
         fcntl.flock(fd, fcntl.LOCK_EX)
@@ -783,39 +783,6 @@ def test_lsm_reader_survives_concurrent_compaction(
     assert state(spark, lsm) == want
 
 
-def test_lsm_keep_versions_survives_two_flips(
-    spark, tmp_path, student_struct, student_mapping
-):
-    """r13 verdict #3: the retirement window is configurable — at
-    keep_versions=2 a reader held across TWO compactions still scans green
-    (the default window is one flip), and the sweep drops N-3 instead of
-    N-2. Default behavior is unchanged (covered by the sibling tests)."""
-    lsm = LogStructuredKeyedStore(
-        str(tmp_path / "lsm"), n_buckets=4, keep_versions=2
-    )
-    apply_batches(spark, lsm, student_struct, student_mapping, [BATCH_1])
-    lsm.compact(spark, TABLE)
-    apply_batches(spark, lsm, student_struct, student_mapping, [BATCH_2])
-    want = state(spark, lsm)
-    held = lsm.read(spark, TABLE)  # resolves the current pointer lazily
-    assert lsm.compact(spark, TABLE) is True  # flip 1
-    apply_batches(spark, lsm, student_struct, student_mapping, [BATCH_3])
-    assert lsm.compact(spark, TABLE) is True  # flip 2 — would retire held's
-    # version under the default window
-    got = sorted(tuple(r) for r in held.select(*COLS).collect())
-    assert got == want
-    # the window is a bound, not a leak: after one more flip the oldest
-    # version is swept (keep current + 2 retired)
-    apply_batches(spark, lsm, student_struct, student_mapping, [BATCH_3])
-    assert lsm.compact(spark, TABLE) is True
-    vers = sorted(
-        int(e.split("_v")[1])
-        for e in os.listdir(lsm.table_path(TABLE))
-        if e.startswith("base_v")
-    )
-    assert len(vers) <= 3 and max(vers) - min(vers) <= 2
-
-
 def test_lsm_read_base_uses_doc_snapshot_schema(spark, tmp_path):
     """r13 review: _read_base must take the schema from the SAME doc
     snapshot as the version it reads — re-reading the registry could pair
@@ -833,8 +800,8 @@ def test_lsm_read_base_uses_doc_snapshot_schema(spark, tmp_path):
     new_schema = T.StructType(
         [T.StructField("k", T.IntegerType()), T.StructField("w", T.StringType())]
     )
-    lsm._update_registry(
-        "t",
+    lsm._versions("t").update(
+        stale_doc,
         schema=new_schema.jsonValue(),
         base_version=int(stale_doc["base_version"]) + 1,
     )
@@ -877,7 +844,7 @@ def test_lsm_refuses_rewrite_store_table(spark, tmp_path):
     os.makedirs(os.path.join(path, "_dead_letter", "batch=b0.0000"))
     with open(os.path.join(path, "_checkpoint.json"), "w") as f:
         _json.dump({"position": 1, "filename": None}, f)
-    assert os.path.exists(lsm._lock_path("t"))  # left by the refused append
+    assert os.path.exists(lsm._versions("t").lock_path)  # left by the refused append
     for entry in os.listdir(path):
         if entry != "t":
             assert lsm._doc(entry) == {}, entry

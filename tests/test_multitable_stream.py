@@ -13,6 +13,7 @@ import os
 from mysql_hbase_replicator_spark.catalog.meta import HbaseCollInfo, HbaseTableInfo
 from mysql_hbase_replicator_spark.operators.merge import ParquetKeyedStore
 from mysql_hbase_replicator_spark.streaming.pipeline import CdcStreamPipeline
+from tests.test_dedup_similarity import plant_orphan_version
 
 
 def score_log_mapping() -> HbaseTableInfo:
@@ -273,12 +274,15 @@ def test_soak_rotates_deadletter_compaction_restart(spark, tmp_path, student_map
         r.dead_letter_count for r in pipe1.results
     ) == 2  # both audit events queued
 
-    # --- injected crash #3: compaction died between retire and promote ------
-    os.replace(deduper.index_dir, deduper.index_dir + ".retired")
-    admitted2 = screen(deduper, doc_batches[1])  # _recover restores first
+    # --- injected crash #3: a rewrite died before its pointer flip ----------
+    orphan = plant_orphan_version(deduper, deduper.index_dir)
+    admitted2 = screen(deduper, doc_batches[1])  # screens the live version
     assert admitted2 == screen(oracle_deduper, doc_batches[1])
     assert 7 in admitted2  # genuinely new doc admitted
     assert 5 not in admitted2  # exact dup of an admitted doc rejected
+    # the batch's rewrite (max_files=1) overwrote the orphan and flipped to it
+    assert deduper._live_dir(deduper.index_dir) == orphan
+    assert not os.path.exists(os.path.join(orphan, "junk.parquet"))
     assert compactions["n"] >= 1  # max_files=1 forced at least one compaction
 
     # --- phase 2: continue the SAME stream from checkpoint ------------------
@@ -464,11 +468,13 @@ def test_soak_debezium_envelope_source(spark, tmp_path, student_mapping):
     dl = spark.read.parquet(os.path.join(pipe1.store.base_dir, DEAD_LETTER_TABLE))
     assert dl.filter(dl.reason == "unparseable debezium envelope").count() == 1
 
-    # injected crash: compaction died between retire and promote
-    os.replace(deduper.index_dir, deduper.index_dir + ".retired")
+    # injected crash: a rewrite died before its pointer flip
+    orphan = plant_orphan_version(deduper, deduper.index_dir)
     admitted2 = screen(deduper, doc_batches[1])
     assert admitted2 == screen(oracle_deduper, doc_batches[1])
     assert 7 in admitted2 and 5 not in admitted2
+    assert deduper._live_dir(deduper.index_dir) == orphan
+    assert not os.path.exists(os.path.join(orphan, "junk.parquet"))
 
     phase2 = [
         env("u", "score_log", before={"entry_id": 100, "points": 1.5},
