@@ -15,11 +15,22 @@ micro-batch of change events:
        dead-lettered — the reference throws
        "sql statement does not contain all primary keys",
        HbaseApplier.scala:204-208).
-6. K5  event-ordered apply collapsed per batch: last action per key by
-       (position, seq) — the batch equivalent of the reference's
+6. K5  each valid event expands into its keyed actions in ONE generator,
+       ``inline(when(valid, CASE op ...))``: an insert emits the
+       after-image's upsert, a delete the before-key's delete, an update
+       the after-image's upsert at ``_seq`` 1 plus, under
+       ``k3_mode="intended"``, the before-key's delete at ``_seq`` 0. The
+       actions are collapsed per batch: last action per key by (stream
+       order, ``_seq``) — the batch equivalent of the reference's
        single-thread strict ordering (Rep.scala:56-65).
-7. K2/K3/K4 merge: upserts (insert + update-after-image) and deletes
-       (delete + update-before-key) applied via ParquetKeyedStore.merge.
+7. K2/K3/K4 merge: the collapsed upserts and deletes go to the store's
+       ``merge_actions`` in one call per table.
+
+The Columns of steps 2-6 and of the batch-wide stats/K1 pass depend on the
+mapping alone, so they are built once and reused by every later batch
+(``_EXPRS``): the memo is keyed on the mapping's content (``to_json()``),
+``k3_mode``, the image mode (generic JSON strings or typed structs) and the
+order column (``seq`` or ``position``), and scoped to the live SparkContext.
 
 K3 note (SURVEY §2.3): the reference's update deletes the old row only when
 the before/after rowkeys are EQUAL (HbaseApplier.scala:252) — a PK-changing
@@ -45,6 +56,7 @@ import hashlib
 import json
 import os
 import uuid
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -94,18 +106,19 @@ def dead_letter_batch_path(store: ParquetKeyedStore, token: str) -> str:
 
 
 # Micro-batch regime. A batch whose optimized plan Spark estimates at or
-# below SMALL_BATCH_BYTES runs as ONE partition: the cached events and the
-# K5 action union are coalesced to a single partition, which already
-# satisfies the stats aggregate's and the collapse window's clustering
-# requirement, so neither plans an Exchange and every kernel action is one
-# single-stage job (with AQE on, a shuffle costs two jobs: the map stage and
-# the re-optimized result stage). The regime is a property of the plan, so
-# it holds in whichever session owns the frame; a session conf could not do
-# this, because foreachBatch hands the kernel frames of the stream's cloned
-# session, which never sees conf set on the caller's. The decision reads
-# the optimized plan's sizeInBytes before the first action, which runs no
-# job; a plan Spark cannot size reports spark.sql.defaultSizeInBytes
-# (Long.MaxValue unless configured) and runs large. Large batches
+# below SMALL_BATCH_BYTES runs as ONE partition: the cached events are
+# coalesced to a single partition, which the K5 action generator keeps and
+# which already satisfies the stats aggregate's and the collapse window's
+# clustering requirement, so neither plans an Exchange and every kernel
+# action is one single-stage job (with AQE on, a shuffle costs two jobs: the
+# map stage and the re-optimized result stage). The regime is a property of
+# the plan, so it holds in whichever session owns the frame; a session conf
+# could not do this, because foreachBatch hands the kernel frames of the
+# stream's cloned session, which never sees conf set on the caller's. The
+# decision reads the optimized plan's sizeInBytes before the first action,
+# which runs no job; a plan Spark cannot size reports
+# spark.sql.defaultSizeInBytes (Long.MaxValue unless configured) and runs
+# large. Large batches
 # (backfills, the 200k-event kernel bench) keep the session's AQE shuffles
 # and the collapse cache. Measured through the batch API on local[4] with
 # the benchmark's generic log (~174 B per event): at 20k events (3.5 MB) the
@@ -135,10 +148,6 @@ class CdcBatchResult:
 
 class DeadLetterOverflowError(RuntimeError):
     """K6 failed-event-queue overflow (Rep.scala:86-92)."""
-
-
-def _full_name() -> Column:
-    return F.concat(F.col("db"), F.lit("."), F.col("table"))
 
 
 def _present(side: str, col_name: str) -> Column:
@@ -179,14 +188,164 @@ def _valid_expr(info: HbaseTableInfo, before: Column, after: Column) -> Column:
     )
 
 
-def _sink_projection(info: HbaseTableInfo, side: str) -> list[Column]:
-    """P2 (gate) + P3 (rename) + P4 (cast) for one image side."""
+def _sink_projection(info: HbaseTableInfo, side: str, keys_only: bool = False) -> list[Column]:
+    """P2 (gate) + P3 (rename) + P4 (cast) for one image side, in sink
+    column order. ``keys_only`` nulls the non-key columns (a delete action
+    carries only the before-key)."""
     return [
-        _gated(side, c.dbColumnName)
+        (F.lit(None) if keys_only and not c.isPrimaryKey else _gated(side, c.dbColumnName))
         .cast(spark_type_from_name(c.hbaseColumnType, restrict_to_six=False))
         .alias(c.hbaseColumnName)
         for c in info.cols
     ]
+
+
+# Kernel expressions memo. Every Column the kernel derives from a mapping
+# alone is built once and reused by later batches: rebuilding them cost
+# ~3.6k py4j round trips per 3-table trickle trigger, most of the trigger's
+# driver CPU. Entries are keyed on the mapping's CONTENT (``to_json()``), so
+# a mapping edited in place takes effect on the next batch, plus k3_mode,
+# the image mode (generic JSON strings vs typed structs) and the order
+# column. The memo is scoped to the live SparkContext: a Column holds JVM
+# references, and a restarted context starts with an empty memo.
+_EXPRS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _memo(spark: SparkSession, key: tuple, build):
+    memo = _EXPRS.setdefault(spark.sparkContext, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+@dataclass(frozen=True)
+class _StatsExprs:
+    """The batch-wide stats pass over one mapping set."""
+
+    full_name: Column  # db.table
+    aggs: list[Column]  # groupBy(_full_name, op) aggregates
+    dead: Column  # row op AND K1-invalid: the dead-letter filter
+    row_ops: Column
+    table_filter: dict[str, Column]  # full name -> _full_name == name
+
+
+def _stats_exprs(
+    spark: SparkSession, mappings: dict[str, HbaseTableInfo], generic: bool, ord_name: str
+) -> _StatsExprs:
+    def build() -> _StatsExprs:
+        # K1 validity, one CASE branch per mapped table. Generic mode parses
+        # the JSON images inline with each table's declared schema.
+        invalid_case = F.lit(False)
+        for fn, info in mappings.items():
+            if generic:
+                struct = source_struct(info)
+                b = F.from_json(F.col("before"), struct)
+                a = F.from_json(F.col("after"), struct)
+            else:
+                b, a = F.col("before"), F.col("after")
+            invalid_case = F.when(
+                F.col("_full_name") == fn, ~_valid_expr(info, b, a)
+            ).otherwise(invalid_case)
+        row_ops = F.col("op").isin(*ROW_OPS)
+        ord_col = F.col(ord_name)
+        aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(row_ops & invalid_case, 1).otherwise(0)).alias("n_dead"),
+            F.max(F.struct(ord_col.alias("o"), F.col("position").alias("position"))).alias(
+                "maxpos"
+            ),
+            # rotate consumption (HbaseApplier.scala:155-165): the current
+            # binlog file is the filename carried by the latest
+            # filename-bearing event (rotate markers and any event stamped
+            # at source). max ignores the all-null groups.
+            F.max(
+                F.when(
+                    F.col("filename").isNotNull(),
+                    F.struct(ord_col.alias("o"), F.col("filename").alias("filename")),
+                )
+            ).alias("maxfile"),
+        ]
+        return _StatsExprs(
+            full_name=F.concat(F.col("db"), F.lit("."), F.col("table")),
+            aggs=aggs,
+            dead=row_ops & invalid_case,
+            row_ops=row_ops,
+            table_filter={fn: F.col("_full_name") == fn for fn in mappings},
+        )
+
+    key = ("stats", tuple((fn, info.to_json()) for fn, info in mappings.items()), generic, ord_name)
+    return _memo(spark, key, build)
+
+
+@dataclass(frozen=True)
+class _TableExprs:
+    """One table's kernel: parse, expand into keyed actions, collapse."""
+
+    parse: list[Column]  # select list: _ord, op, both images, both gates
+    actions: Column  # the action generator
+    rn: Column  # K5 row number over the PK window
+    last: Column  # _rn == 1
+    sink_cols: list[str]
+    sink_pks: list[str]
+
+
+def _table_exprs(
+    spark: SparkSession, info: HbaseTableInfo, k3_mode: str, generic: bool, ord_name: str
+) -> _TableExprs:
+    def build() -> _TableExprs:
+        if generic:
+            # images arrive as JSON strings: parse them against THIS table's
+            # declared source schema before the typed kernel
+            struct = source_struct(info)
+            images = [F.from_json(F.col(s), struct).alias(s) for s in ("before", "after")]
+        else:
+            images = [F.col("before"), F.col("after")]
+        parse = [
+            # stream-order key for the K5 collapse: seq when the source
+            # stamps it (positions reset per binlog file, see
+            # apply_cdc_batch), else position
+            F.col(ord_name).alias("_ord"),
+            F.col("op"),
+            *images,
+            F.col("included_before"),
+            F.col("included_after"),
+        ]
+
+        def action(seq: int, kind: str, side: str) -> Column:
+            return F.struct(
+                F.lit(seq).alias("_seq"),
+                F.lit(kind).alias("_kind"),
+                *_sink_projection(info, side, keys_only=kind == "delete"),
+            )
+
+        upsert = action(1, "upsert", "after")
+        delete = action(0, "delete", "before")
+        # K3 intended: delete the before-key; when the PK didn't change, the
+        # same-position upsert (seq 1 > 0) wins — full-row replace, like the
+        # reference's delete-then-Put (HbaseApplier.scala:252-258). Faithful:
+        # the update is a plain upsert of the after-image.
+        on_update = F.array(upsert, delete) if k3_mode == "intended" else F.array(upsert)
+        op = F.col("op")
+        expand = (
+            F.when(op == OP_INSERT, F.array(upsert))
+            .when(op == OP_UPDATE, on_update)
+            .when(op == OP_DELETE, F.array(delete))
+        )
+        # K1: an invalid event expands to NULL, which inline turns into no
+        # rows (its dead letter was queued by apply_cdc_batch)
+        valid = _valid_expr(info, F.col("before"), F.col("after"))
+        sink_pks = [c.hbaseColumnName for c in info.key_columns()]
+        w = Window.partitionBy(*sink_pks).orderBy(F.desc("_ord"), F.desc("_seq"))
+        return _TableExprs(
+            parse=parse,
+            actions=F.inline(F.when(valid, expand)),
+            rn=F.row_number().over(w),
+            last=F.col("_rn") == 1,
+            sink_cols=[c.hbaseColumnName for c in info.cols],
+            sink_pks=sink_pks,
+        )
+
+    return _memo(spark, ("table", info.to_json(), k3_mode, generic, ord_name), build)
 
 
 def read_checkpoint_state(store: ParquetKeyedStore) -> dict | None:
@@ -245,8 +404,23 @@ def apply_cdc_batch(
 
     batch_t0 = _time.perf_counter()
     result = CdcBatchResult()
-    if "filename" not in events.columns:  # pre-rotate fixtures / legacy logs
+    dtypes = dict(events.dtypes)
+    if "filename" not in dtypes:  # pre-rotate fixtures / legacy logs
         events = events.withColumn("filename", F.lit(None).cast("string"))
+    # Stream-order for the checkpoint pair and the K5 collapse: real MySQL
+    # positions reset per binlog file (RepEvent.scala:9-10 pairs
+    # filename+position for exactly this reason), so "max(position) over the
+    # batch" can pair the NEW filename with the OLD file's larger position
+    # after a mid-batch rotate. Sources that interleave rotates mid-batch
+    # must therefore stamp a globally monotonic ``seq`` column (arrival
+    # order); when present, the checkpoint is taken from the LAST event by
+    # seq — its position, and the filename of the last filename-bearing
+    # event by seq. Without ``seq`` we fall back to position order, which is
+    # only correct for globally monotonic positions (true of the file-log
+    # stand-in fixtures).
+    ord_name = "seq" if "seq" in dtypes else "position"
+    # generic multi-table mode: the images arrive as JSON strings
+    generic_images = dtypes.get("before") == "string"
     small = _plan_bytes(events) <= SMALL_BATCH_BYTES
     if small:
         events = events.coalesce(1)
@@ -256,60 +430,17 @@ def apply_cdc_batch(
         # (the reference pays a checkpoint write per event,
         # HbaseApplier.scala:155-176; we pay one tiny groupBy per batch)
         #
-        # Stream-order for the checkpoint pair: real MySQL positions reset
-        # per binlog file (RepEvent.scala:9-10 pairs filename+position for
-        # exactly this reason), so "max(position) over the batch" can pair
-        # the NEW filename with the OLD file's larger position after a
-        # mid-batch rotate. Sources that interleave rotates mid-batch must
-        # therefore stamp a globally monotonic ``seq`` column (arrival
-        # order); when present, the checkpoint is taken from the LAST event
-        # by seq — its position, and the filename of the last
-        # filename-bearing event by seq. Without ``seq`` we fall back to
-        # position order, which is only correct for globally monotonic
-        # positions (true of the file-log stand-in fixtures).
-        ord_col = F.col("seq") if "seq" in events.columns else F.col("position")
         # K1 validity is folded into this same pass (one CASE branch per
         # mapped table) so the kernel never pays a dedicated dead-letter
         # count action: the single dead-letter WRITE below happens only
         # when some table's n_dead here is non-zero (the rare path), and it
         # selects its rows with this same CASE, so the counts and the
-        # written rows can't diverge. Generic multi-table mode parses the
-        # JSON images inline with each table's declared schema — the
-        # expressions _apply_table's validity filter uses.
-        generic_images = dict(events.dtypes).get("before") == "string"
-        invalid_case = F.lit(False)
-        for fn, info in mappings.items():
-            if generic_images:
-                struct = source_struct(info)
-                b = F.from_json(F.col("before"), struct)
-                a = F.from_json(F.col("after"), struct)
-            else:
-                b, a = F.col("before"), F.col("after")
-            invalid_case = F.when(
-                F.col("_full_name") == fn, ~_valid_expr(info, b, a)
-            ).otherwise(invalid_case)
-        named = events.withColumn("_full_name", _full_name())
+        # written rows can't diverge.
+        exprs = _stats_exprs(spark, mappings, generic_images, ord_name)
+        named = events.withColumn("_full_name", exprs.full_name)
         stats = (
             named.groupBy("_full_name", "op")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(F.col("op").isin(*ROW_OPS) & invalid_case, 1).otherwise(0)
-                ).alias("n_dead"),
-                F.max(
-                    F.struct(ord_col.alias("o"), F.col("position").alias("position"))
-                ).alias("maxpos"),
-                # rotate consumption (HbaseApplier.scala:155-165): the current
-                # binlog file is the filename carried by the latest
-                # filename-bearing event (rotate markers and any event stamped
-                # at source). max ignores the all-null groups.
-                F.max(
-                    F.when(
-                        F.col("filename").isNotNull(),
-                        F.struct(ord_col.alias("o"), F.col("filename").alias("filename")),
-                    )
-                ).alias("maxfile"),
-            )
+            .agg(*exprs.aggs)
             .collect()
         )
         # Driver-side max over the collected (o, value) structs: compare via
@@ -396,7 +527,7 @@ def apply_cdc_batch(
         if result.dead_letter_count:
             _write_dead_letters(
                 store,
-                named.filter(F.col("op").isin(*ROW_OPS) & invalid_case),
+                named.filter(exprs.dead),
                 generic_images,
                 # one directory per (batch, mapped-table set): a replayed
                 # call overwrites its own write, while the per-table calls
@@ -407,15 +538,17 @@ def apply_cdc_batch(
                 f"-{','.join(sorted(mappings))}",
             )
 
-        row_events = named.filter(F.col("op").isin(*ROW_OPS))
+        row_events = named.filter(exprs.row_ops)
         for full_name in sorted(tables_in_batch):
             t0 = _time.perf_counter()
             _apply_table(
                 spark,
-                row_events.filter(F.col("_full_name") == full_name),
+                row_events.filter(exprs.table_filter[full_name]),
                 store,
                 mappings[full_name],
                 k3_mode,
+                generic_images,
+                ord_name,
                 small=small,
                 n_valid=row_counts[full_name] - dead_counts[full_name],
             )
@@ -506,6 +639,8 @@ def _apply_table(
     store: ParquetKeyedStore,
     info: HbaseTableInfo,
     k3_mode: str,
+    generic_images: bool,
+    ord_name: str,
     small: bool,
     n_valid: int,
 ) -> None:
@@ -515,65 +650,15 @@ def _apply_table(
         # skip the collapse + store write (the LSM store would otherwise
         # append an empty delta per all-dead batch)
         return
-    # generic multi-table mode: images arrive as JSON strings; parse them
-    # against THIS table's declared source schema before the typed kernel
-    if dict(ev.dtypes).get("before") == "string":
-        struct = source_struct(info)
-        ev = ev.withColumn("before", F.from_json("before", struct)).withColumn(
-            "after", F.from_json("after", struct)
-        )
-    sink_cols = [c.hbaseColumnName for c in info.cols]
-    sink_pks = [c.hbaseColumnName for c in info.key_columns()]
-    table_name = info.hbaseTableName or info.full_name
-
-    # stream-order key for the K5 collapse: seq when the source stamps it
-    # (positions reset per binlog file — see apply_cdc_batch), else position
-    ev = ev.withColumn("_ord", F.col("seq") if "seq" in ev.columns else F.col("position"))
-
-    # --- K1 validation: the dead letters were queued by apply_cdc_batch ----
-    ev = ev.filter(_valid_expr(info, F.col("before"), F.col("after")))
-
-    # --- expand events into keyed actions ----------------------------------
-    def upsert_from_after(src: DataFrame) -> DataFrame:
-        return src.select(
-            "_ord",
-            F.lit(1).alias("_seq"),
-            F.lit("upsert").alias("_kind"),
-            *_sink_projection(info, "after"),
-        )
-
-    def delete_from_before(src: DataFrame) -> DataFrame:
-        before_pks = [
-            _gated("before", c.dbColumnName)
-            .cast(spark_type_from_name(c.hbaseColumnType, restrict_to_six=False))
-            .alias(c.hbaseColumnName)
-            for c in info.key_columns()
-        ]
-        non_keys = [
-            F.lit(None).cast(spark_type_from_name(c.hbaseColumnType, restrict_to_six=False)).alias(c.hbaseColumnName)
-            for c in info.non_key_columns()
-        ]
-        proj = src.select("_ord", F.lit(0).alias("_seq"), F.lit("delete").alias("_kind"), *before_pks, *non_keys)
-        return proj.select("_ord", "_seq", "_kind", *sink_cols)
-
-    actions = upsert_from_after(ev.filter(F.col("op") == OP_INSERT))
-    updates = ev.filter(F.col("op") == OP_UPDATE)
-    actions = actions.unionByName(upsert_from_after(updates))
-    if k3_mode == "intended":
-        # delete the before-key; when the PK didn't change, the same-position
-        # upsert (seq 1 > 0) wins — full-row replace, like the reference's
-        # delete-then-Put (HbaseApplier.scala:252-258).
-        actions = actions.unionByName(delete_from_before(updates))
-    actions = actions.unionByName(delete_from_before(ev.filter(F.col("op") == OP_DELETE)))
-
-    if small:
-        # the union's partitioning is unknown to the planner: one partition
-        # lets the window below plan without an Exchange (SMALL_BATCH_BYTES)
-        actions = actions.coalesce(1)
+    exprs = _table_exprs(spark, info, k3_mode, generic_images, ord_name)
+    # --- parse, then expand each valid event into its keyed actions in ONE
+    # Generate over the cached events (module docstring, step 6). The
+    # Generate keeps its child's partitioning, so a small batch's single
+    # partition reaches the window below and it plans no Exchange.
+    actions = ev.select(*exprs.parse).select("_ord", exprs.actions)
 
     # --- K5: last action per PK by (stream order, seq) ---------------------
-    w = Window.partitionBy(*sink_pks).orderBy(F.desc("_ord"), F.desc("_seq"))
-    final = actions.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    final = actions.withColumn("_rn", exprs.rn).filter(exprs.last)
 
     # The rewrite store's merge runs two actions over the collapsed batch
     # (changed-bucket discovery, then the staged write) — for LARGE batches,
@@ -588,7 +673,9 @@ def _apply_table(
         final = final.persist()
     try:
         # --- K2/K3/K4: MERGE ------------------------------------------------
-        store.merge_actions(spark, table_name, final, sink_cols, sink_pks)
+        store.merge_actions(
+            spark, info.hbaseTableName or info.full_name, final, exprs.sink_cols, exprs.sink_pks
+        )
     finally:
         if cache:
             final.unpersist()

@@ -19,7 +19,10 @@ from mysql_hbase_replicator_spark.operators.cdc_apply import (
     read_checkpoint,
 )
 from mysql_hbase_replicator_spark.operators.merge import ParquetKeyedStore
-from mysql_hbase_replicator_spark.sources.cdc_events import events_from_rows
+from mysql_hbase_replicator_spark.sources.cdc_events import (
+    cdc_json_event_schema,
+    events_from_rows,
+)
 
 COLS = ("sn", "id", "score", "name", "rem")
 PKS = ("sn", "id")
@@ -70,9 +73,32 @@ def spark_final_state(spark, store) -> list[tuple]:
     return sorted(tuple(r) for r in df.select(*COLS).collect())
 
 
-def run_batch(spark, tmp_path, student_struct, student_mapping, events, **kw):
+def json_events_from_rows(spark, rows: list[dict]):
+    """Generic-mode twin of ``events_from_rows``: the same events with their
+    images as JSON strings, parsed per table by the kernel."""
+    import json
+
+    with_seq = any("seq" in r for r in rows)
+    image = lambda d: None if d is None else json.dumps(d)  # noqa: E731
+    data = [
+        (
+            r["position"], r["op"], r.get("db", "db"), r.get("table", "t"),
+            image(r.get("before")), image(r.get("after")),
+            r.get("included_before"), r.get("included_after"), r.get("filename"),
+        )
+        + ((r.get("seq"),) if with_seq else ())
+        for r in rows
+    ]
+    return spark.createDataFrame(data, cdc_json_event_schema(with_seq))
+
+
+def run_batch(spark, tmp_path, student_struct, student_mapping, events, generic=False, **kw):
     store = ParquetKeyedStore(str(tmp_path / "store"), n_buckets=4)
-    ev_df = events_from_rows(spark, events, student_struct)
+    ev_df = (
+        json_events_from_rows(spark, events)
+        if generic
+        else events_from_rows(spark, events, student_struct)
+    )
     result = apply_cdc_batch(
         spark, ev_df, store, {"mixfs.student": student_mapping}, **kw
     )
@@ -131,18 +157,20 @@ def test_update_pk_change_intended(spark, tmp_path, student_struct, student_mapp
 def test_update_pk_change_faithful_orphans_old_row(spark, tmp_path, student_struct, student_mapping):
     """The reference's actual (inverted) K3: delete fires only when the
     rowkeys are EQUAL (HbaseApplier.scala:252), so a PK-changing update
-    leaves the old row behind."""
+    leaves the old row behind. Typed and generic (JSON) images alike."""
     events = [
         ev(1, "insert", after=row(1, 1, 90, "ann", "a")),
         ev(2, "update", before=row(1, 1, 90, "ann", "a"), after=row(9, 9, 90, "ann", "a")),
     ]
-    store, _ = run_batch(
-        spark, tmp_path, student_struct, student_mapping, events, k3_mode="faithful"
-    )
-    assert spark_final_state(spark, store) == [
-        (1, 1, 90, "ann", "a"),  # orphan, faithfully reproduced
-        (9, 9, 90, "ann", "a"),
-    ]
+    for generic in (False, True):
+        store, _ = run_batch(
+            spark, tmp_path / f"generic{generic}", student_struct, student_mapping,
+            events, generic=generic, k3_mode="faithful",
+        )
+        assert spark_final_state(spark, store) == [
+            (1, 1, 90, "ann", "a"),  # orphan, faithfully reproduced
+            (9, 9, 90, "ann", "a"),
+        ], f"generic={generic}"
 
 
 # --- B3.4: delete of never-inserted key is a no-op (K4) --------------------
@@ -928,3 +956,87 @@ def test_typed_readers_scan_seq_when_asked(spark, tmp_path, student_struct):
     assert "seq" not in without.columns  # opt-in stays opt-in
     with_seq = read_event_log(spark, path, student_struct, with_seq=True)
     assert [r.seq for r in with_seq.collect()] == [7]
+
+
+# --- the kernel's plan and its expression memo -------------------------------
+def test_generic_batch_expands_actions_in_one_scan(spark, tmp_path, student_mapping):
+    """One table's append reads the cached events ONCE: every event expands
+    into its keyed actions in one Generate, where four filtered branches of
+    a Union each scanned the cache before."""
+    from mysql_hbase_replicator_spark.operators.merge import LogStructuredKeyedStore
+
+    plans = []
+
+    class CapturingStore(LogStructuredKeyedStore):
+        def merge_actions(self, spark, name, final, sink_cols, pk_cols):
+            plans.append(final._jdf.queryExecution().optimizedPlan().toString())
+            super().merge_actions(spark, name, final, sink_cols, pk_cols)
+
+    events = [
+        ev(1, "insert", after=row(1, 1, 90, "ann", "a")),
+        ev(2, "update", before=row(1, 1, 90, "ann", "a"), after=row(9, 9, 91, "ann", "a")),
+        ev(3, "insert", after=row(2, 2, 80, "bob", "b")),
+        ev(4, "delete", before=row(2, 2)),
+        ev(5, "insert", after=row(None, 3)),  # K1: dead-lettered
+    ]
+    store = CapturingStore(str(tmp_path / "store"))
+    result = apply_cdc_batch(
+        spark, json_events_from_rows(spark, events), store, {"mixfs.student": student_mapping}
+    )
+    assert result.dead_letter_count == 1
+    assert spark_final_state(spark, store) == duckdb_final_state(events[:4])
+    [plan] = plans
+    nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
+    assert nodes.count("InMemoryRelation") == 1, plan
+    assert "Union" not in nodes, plan
+
+
+def test_equal_mappings_share_one_memo_entry(spark, tmp_path, student_struct, student_mapping):
+    """The kernel's expressions are memoized on the mapping's content: a
+    second batch with an equal but distinct mapping object builds nothing."""
+    import copy
+
+    from mysql_hbase_replicator_spark.operators import cdc_apply
+
+    store = ParquetKeyedStore(str(tmp_path / "store"), n_buckets=4)
+    batches = [
+        [ev(1, "insert", after=row(1, 1, 90, "ann", "a"))],
+        [ev(2, "update", before=row(1, 1, 90, "ann", "a"), after=row(1, 1, 95, "ann", "a"))],
+    ]
+    keys = []
+    for batch in batches:
+        mappings = {"mixfs.student": copy.deepcopy(student_mapping)}
+        apply_cdc_batch(spark, events_from_rows(spark, batch, student_struct), store, mappings)
+        keys.append(set(cdc_apply._EXPRS[spark.sparkContext]))
+    assert keys[0] == keys[1]
+    a, b = copy.deepcopy(student_mapping), copy.deepcopy(student_mapping)
+    assert cdc_apply._table_exprs(spark, a, "intended", False, "position") is (
+        cdc_apply._table_exprs(spark, b, "intended", False, "position")
+    )
+    assert spark_final_state(spark, store) == [(1, 1, 95, "ann", "a")]
+
+
+def test_mapping_edited_in_place_takes_effect_next_batch(spark, tmp_path, student_struct, student_mapping):
+    """A mapping object edited between two batches is applied as edited:
+    the second batch's delta carries the new sink type."""
+    import copy
+
+    from pyspark.sql import types as T
+
+    from mysql_hbase_replicator_spark.operators.merge import LogStructuredKeyedStore
+
+    mapping = copy.deepcopy(student_mapping)
+    mappings = {"mixfs.student": mapping}
+    store = LogStructuredKeyedStore(str(tmp_path / "store"))
+
+    def delta_type(seq):
+        path = os.path.join(store._delta_path("mixfs:student2"), f"{store.SEQ_COL}={seq}")
+        return spark.read.parquet(path).schema["score"].dataType
+
+    batch = [ev(1, "insert", after=row(1, 1, 90, "ann", "a"))]
+    apply_cdc_batch(spark, events_from_rows(spark, batch, student_struct), store, mappings)
+    assert delta_type(0) == T.IntegerType()
+    next(c for c in mapping.cols if c.hbaseColumnName == "score").hbaseColumnType = "LongType"
+    batch = [ev(2, "insert", after=row(2, 2, 80, "bob", "b"))]
+    apply_cdc_batch(spark, events_from_rows(spark, batch, student_struct), store, mappings)
+    assert delta_type(1) == T.LongType()

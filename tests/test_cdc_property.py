@@ -8,7 +8,8 @@ at-least-once delivery).
 Traces are *valid* CDC streams: update/delete before-images always reflect
 the current row state, as binlog row events do. Example count is small —
 each example runs real Spark jobs — but the key space (3×2 PKs) forces heavy
-upsert/delete collision coverage per trace.
+upsert/delete collision coverage per trace. The event-replay properties run
+every trace twice: with typed images and with generic (JSON-string) images.
 """
 
 from __future__ import annotations
@@ -21,7 +22,13 @@ try:
 except ImportError:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
 
-from test_cdc_apply import duckdb_final_state, run_batch, spark_final_state
+from test_cdc_apply import (
+    duckdb_final_state,
+    json_events_from_rows,
+    spark_final_state,
+)
+
+from mysql_hbase_replicator_spark.sources.cdc_events import events_from_rows
 
 # Determinism (r11 verdict #4): `.hypothesis/` is gitignored, so without
 # derandomization a round-close "green" can simply mean the falsifying trace
@@ -95,35 +102,43 @@ def cdc_trace(draw):
 def test_random_trace_matches_sequential_oracle(
     spark, tmp_path_factory, student_struct, student_mapping, trace, split
 ):
-    tmp = tmp_path_factory.mktemp("cdcprop")
     cut = (split * len(trace)) // 101  # any batch partitioning is legal
     batches = [b for b in (trace[:cut], trace[cut:]) if b]
-
-    store = None
-    for batch in batches:
-        store, _ = run_batch_into(
-            spark, tmp, student_struct, student_mapping, batch, store
-        )
-
     expected = duckdb_final_state(trace)
-    assert spark_final_state(spark, store) == expected
 
-    # at-least-once: replaying the last batch must not change the state
-    store, _ = run_batch_into(
-        spark, tmp, student_struct, student_mapping, batches[-1], store
+    # typed images, then the same trace as generic (JSON) images
+    for generic in (False, True):
+        tmp = tmp_path_factory.mktemp("cdcprop")
+        store = None
+        for batch in batches:
+            store, _ = run_batch_into(
+                spark, tmp, student_struct, student_mapping, batch, store, generic
+            )
+        assert spark_final_state(spark, store) == expected, f"generic={generic}"
+
+        # at-least-once: replaying the last batch must not change the state
+        store, _ = run_batch_into(
+            spark, tmp, student_struct, student_mapping, batches[-1], store, generic
+        )
+        assert spark_final_state(spark, store) == expected, f"generic={generic}"
+
+
+def events_df(spark, events, student_struct, generic):
+    return (
+        json_events_from_rows(spark, events)
+        if generic
+        else events_from_rows(spark, events, student_struct)
     )
-    assert spark_final_state(spark, store) == expected
 
 
-def run_batch_into(spark, tmp, student_struct, student_mapping, events, store):
+def run_batch_into(spark, tmp, student_struct, student_mapping, events, store, generic=False):
     """run_batch against a persistent store dir (multi-batch apply)."""
     from mysql_hbase_replicator_spark.operators.cdc_apply import apply_cdc_batch
     from mysql_hbase_replicator_spark.operators.merge import ParquetKeyedStore
-    from mysql_hbase_replicator_spark.sources.cdc_events import events_from_rows
 
     if store is None:
         store = ParquetKeyedStore(str(tmp / "store"), n_buckets=4)
-    ev_df = events_from_rows(spark, events, student_struct)
+    ev_df = events_df(spark, events, student_struct, generic)
     result = apply_cdc_batch(spark, ev_df, store, {"mixfs.student": student_mapping})
     return store, result
 
@@ -168,27 +183,28 @@ def test_random_trace_lsm_stores_match_oracle(
         BucketedLogStructuredKeyedStore,
         LogStructuredKeyedStore,
     )
-    from mysql_hbase_replicator_spark.sources.cdc_events import events_from_rows
 
     cut = (split * len(trace)) // 101
     batches = [b for b in (trace[:cut], trace[cut:]) if b]
     expected = duckdb_final_state(trace)
 
     for cls in (LogStructuredKeyedStore, BucketedLogStructuredKeyedStore):
-        tmp = tmp_path_factory.mktemp(f"cdcprop_{cls.__name__}")
-        store = cls(str(tmp / "store"), n_buckets=4)
-        for i, batch in enumerate(batches):
-            ev_df = events_from_rows(spark, batch, student_struct)
-            apply_cdc_batch(
-                spark, ev_df, store, {"mixfs.student": student_mapping}
-            )
-            if compact_mid and i == 0 and len(batches) > 1:
-                store.compact(spark, "mixfs:student2")
-        assert spark_final_state(spark, store) == expected, cls.__name__
-        # at-least-once: replay of the final batch is a no-op
-        ev_df = events_from_rows(spark, batches[-1], student_struct)
-        apply_cdc_batch(spark, ev_df, store, {"mixfs.student": student_mapping})
-        assert spark_final_state(spark, store) == expected, cls.__name__
+        for generic in (False, True):
+            what = f"{cls.__name__} generic={generic}"
+            tmp = tmp_path_factory.mktemp(f"cdcprop_{cls.__name__}")
+            store = cls(str(tmp / "store"), n_buckets=4)
+            for i, batch in enumerate(batches):
+                ev_df = events_df(spark, batch, student_struct, generic)
+                apply_cdc_batch(
+                    spark, ev_df, store, {"mixfs.student": student_mapping}
+                )
+                if compact_mid and i == 0 and len(batches) > 1:
+                    store.compact(spark, "mixfs:student2")
+            assert spark_final_state(spark, store) == expected, what
+            # at-least-once: replay of the final batch is a no-op
+            ev_df = events_df(spark, batches[-1], student_struct, generic)
+            apply_cdc_batch(spark, ev_df, store, {"mixfs.student": student_mapping})
+            assert spark_final_state(spark, store) == expected, what
 
 
 def _replay_state(events: list[dict]) -> list[dict]:
